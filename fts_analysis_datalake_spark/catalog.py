@@ -93,8 +93,8 @@ def broadcast_dim(df: DataFrame, name: str) -> DataFrame:
 # declared queries; without this, that session runs with stock defaults
 # (e.g. 200 shuffle partitions) and pays ~6x the reduce-task launch
 # overhead per shuffle at verification scale. Every key here is a
-# runtime-settable spark.sql.* conf (same set session.py bakes into
-# builders), so this is a no-op when the session is already tuned.
+# runtime-settable spark.sql.* conf; session.tune bakes this same dict
+# into builders, so this is a no-op when the session is already tuned.
 _RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -197,15 +197,14 @@ def pagerank(
     ):
         n_iters, d_factor = iters, damping
 
-        def pr(batches):
+        def pr(pdf):
             import numpy as np
             import pandas as pd
 
-            frames = [pdf for pdf in batches]
-            a = pd.concat([f["a"] for f in frames], ignore_index=True)
-            b = pd.concat([f["b"] for f in frames], ignore_index=True)
-            codes, uniq = pd.factorize(pd.concat([a, b], ignore_index=True))
-            m = len(a)
+            codes, uniq = pd.factorize(
+                pd.concat([pdf["a"], pdf["b"]], ignore_index=True)
+            )
+            m = len(pdf)
             ai, bi = codes[:m], codes[m:]
             n_nodes = len(uniq)
             deg = np.bincount(ai, minlength=n_nodes).astype("float64")
@@ -215,14 +214,14 @@ def pagerank(
                 r = (1.0 - d_factor) + d_factor * np.bincount(
                     bi, weights=contrib, minlength=n_nodes
                 )
-            yield pd.DataFrame({"node": uniq, "rank": r})
+            return pd.DataFrame({"node": uniq, "rank": r})
 
         out_type = dict(sym.dtypes)["a"]
         # No trailing checkpoint (r11): every caller references the
         # rank table exactly once, so the eager materialization job
         # bought nothing — the consumer's own action runs the kernel
         # directly (single-reference loop discipline, r6 lesson).
-        return sym.repartition(1).mapInPandas(pr, f"node {out_type}, rank double")
+        return probe.single_task(sym, pr, f"node {out_type}, rank double")
 
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     # Hoist the loop-invariant degree join OUT of the iteration: the
@@ -325,18 +324,17 @@ def bfs_hops(
 
     if probe.gate(
         "bfs_hops",
-        small_finish_rows is not None and edges.count() <= small_finish_rows,
+        small_finish_rows is not None and 0 < edges.count() <= small_finish_rows,
     ):
         hops_cap = max_hops
         src_node = source
 
-        def walk(batches):
+        def walk(pdf):
             import pandas as pd
 
             adj: dict = {}
-            for pdf in batches:
-                for a, b in zip(pdf["a"].to_list(), pdf["b"].to_list()):
-                    adj.setdefault(a, []).append(b)
+            for a, b in zip(pdf["a"].to_list(), pdf["b"].to_list()):
+                adj.setdefault(a, []).append(b)
             dist = {src_node: 0}
             frontier = [src_node]
             for h in range(1, hops_cap + 1):
@@ -349,16 +347,12 @@ def bfs_hops(
                 if not nxt:
                     break
                 frontier = nxt
-            yield pd.DataFrame(
-                sorted(dist.items()), columns=["node", "hop"]
-            )
+            return pd.DataFrame(sorted(dist.items()), columns=["node", "hop"])
 
         out_type = dict(sym.dtypes)["a"]
-        return (
-            sym.repartition(1)
-            .mapInPandas(walk, f"node {out_type}, hop int")
-            .localCheckpoint(eager=True)
-        )
+        return probe.single_task(
+            sym, walk, f"node {out_type}, hop int"
+        ).localCheckpoint(eager=True)
 
     if max_hops <= 8:
         # Bounded-hop fast path: unroll every hop into ONE lazy plan
@@ -414,9 +408,9 @@ def bfs_hops(
 
 def _union_find_one_task(e: DataFrame) -> DataFrame:
     """(node, comp=component min) for a SMALL canonical edge set
-    ``(u, v)`` via single-task union-find: ``repartition(1)`` pulls
-    every edge into one partition (never the driver) and an
-    Arrow-batched mapInPandas kernel runs path-compressed union-find
+    ``(u, v)`` via single-task union-find: :func:`probe.single_task`
+    pulls every edge into one partition (never the driver) and the
+    kernel runs path-compressed union-find
     with union-by-min, so each tree's root is always its minimum
     member. O(E alpha(E)) in one bounded task — the right finisher
     once contraction has shrunk the graph below a row threshold,
@@ -429,7 +423,7 @@ def _union_find_one_task(e: DataFrame) -> DataFrame:
         [T.StructField("node", node_t), T.StructField("comp", node_t)]
     )
 
-    def kernel(batches):
+    def union_find(pdf):
         import pandas as pd
 
         parent: dict = {}
@@ -443,19 +437,18 @@ def _union_find_one_task(e: DataFrame) -> DataFrame:
             return r
 
         nodes = set()
-        for pdf in batches:
-            for u, v in zip(pdf["u"], pdf["v"]):
-                nodes.add(u)
-                nodes.add(v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
+        for u, v in zip(pdf["u"], pdf["v"]):
+            nodes.add(u)
+            nodes.add(v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                if rv < ru:
+                    ru, rv = rv, ru
+                parent[rv] = ru
         ns = sorted(nodes)
-        yield pd.DataFrame({"node": ns, "comp": [find(n) for n in ns]})
+        return pd.DataFrame({"node": ns, "comp": [find(n) for n in ns]})
 
-    return e.repartition(1).mapInPandas(kernel, out_schema)
+    return probe.single_task(e, union_find, out_schema)
 
 
 def connected_components_star(
@@ -494,7 +487,7 @@ def connected_components_star(
 
     ``small_finish_rows`` (opt-in): once seed contraction has shrunk
     the edge set to at most this many rows, finish with a SINGLE-TASK
-    union-find (``repartition(1).mapInPandas``) instead of the star
+    union-find (:func:`probe.single_task`) instead of the star
     loop. Locally the star loop's cost is rounds x fixed per-stage
     scheduling regardless of data size (~0.5 s/round on a 1.3k-edge
     graph), so an O(edges alpha(edges)) one-task finisher beats ~8

@@ -515,19 +515,14 @@ def kmeans_train(
     ):
         n_iters, n_k = iters, k
 
-        def lloyd(batches):
+        def lloyd(pdf):
             import numpy as np
             import pandas as pd
 
-            frames = [pdf for pdf in batches]
-            ids = pd.concat([f[id_col] for f in frames], ignore_index=True)
+            ids = pdf[id_col]
             order = ids.argsort(kind="stable").to_numpy()
             vecs = np.asarray(
-                [
-                    np.asarray(v, dtype="float64")
-                    for f in frames
-                    for v in f[vec_col]
-                ]
+                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
             )[order]
             ids = ids.to_numpy()[order]
             cvecs = vecs[:n_k].copy()
@@ -541,17 +536,16 @@ def kmeans_train(
                     [vecs[best == c].mean(axis=0) for c in keep]
                 )
                 cids = cids[keep]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"cent_id": cids, "cent_vec": [list(v) for v in cvecs]}
             )
 
         id_type = dict(emb.dtypes)[id_col]
-        return (
-            emb.select(id_col, vec_col)
-            .repartition(1)
-            .mapInPandas(lloyd, f"cent_id {id_type}, cent_vec array<double>")
-            .localCheckpoint(eager=True)
-        )
+        return probe.single_task(
+            emb.select(id_col, vec_col),
+            lloyd,
+            f"cent_id {id_type}, cent_vec array<double>",
+        ).localCheckpoint(eager=True)
 
     cents = (
         emb.orderBy(id_col)

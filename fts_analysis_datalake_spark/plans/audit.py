@@ -41,9 +41,11 @@ def has_node(df: DataFrame, node: str) -> bool:
     return node in explain_text(df, "simple")
 
 
-def python_eval_nodes(df: DataFrame) -> list[str]:
-    """Distinct Python-boundary node names in the physical plan."""
-    return sorted(set(_PY_NODE_RE.findall(explain_text(df, "simple"))))
+def python_eval_nodes(plan: DataFrame | str) -> list[str]:
+    """Distinct Python-boundary node names in the physical plan of a
+    DataFrame, or in its already-rendered ``explain_text(df, "simple")``."""
+    text = plan if isinstance(plan, str) else explain_text(plan, "simple")
+    return sorted(set(_PY_NODE_RE.findall(text)))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

@@ -1,18 +1,48 @@
-"""Opt-in branch observation for count-gated kernels.
+"""Count-gated single-task kernels: the gate, the runner, and its contract.
 
-Every count-gated single-task finisher in this repo keeps its
-distributed join/loop form as the else-branch — the 100 TB path
-(SURVEY §2.12 discipline; forced-equivalence-tested in
-tests/test_algorithms.py::test_count_gated_branches_agree). The
-scale probe (scripts/scale_probe.py) needs to OBSERVE which branch a
-query actually took at a given data size, not infer it from the gate
-constants, so each gate site calls :func:`record_branch` with the
-decision it just made. Disabled by default: the call is a dict
-lookup + early return, nothing is recorded in normal operation, and
-the driver contract never sees this module.
+Every bounded iterative operator in this repo (graph walks, dedup,
+curation greedies, domain-sized fits) has two branches: a count gate
+admits inputs small enough for ONE task, which replays the whole loop
+in numpy/Python; above the gate the distributed join/loop form runs —
+the 100 TB path (SURVEY §2.12 discipline). Forced branch equivalence
+is tested in tests/test_algorithms.py::test_count_gated_branches_agree.
+
+:func:`gate` is the single choke point for the branch decision. It
+applies :data:`FORCE_DISTRIBUTED` and, once :func:`enable` ran,
+records which branch each gate took (bench runs and
+scripts/scale_probe.py read :func:`branches`).
+
+:func:`single_task` is the single way to run a kernel. Its contract:
+
+- one task: every row of the input reaches ``kernel(pdf)`` as one
+  pandas frame (``repartition(1).mapInPandas`` + batch concat);
+- empty input gives no rows, and the kernel is not called;
+- a null (pandas NA: SQL NULL, or NaN in a float column) anywhere in
+  the input raises ``ValueError`` naming the kernel and the column —
+  one fail-loud policy instead of per-kernel drops or raises;
+- int64 products go through :func:`mul_i64`, which raises
+  ``OverflowError`` where numpy would wrap (Spark's ANSI arithmetic
+  and DuckDB's BIGINT raise on the same inputs).
+
+The runner launches no Spark job of its own: the gate's count is the
+caller's, and the kernel runs inside the consumer's action.
 """
 
 from __future__ import annotations
+
+import sys
+from collections.abc import Callable
+from typing import TYPE_CHECKING
+
+from pyspark import cloudpickle
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
+
+# Kernels reference mul_i64 from worker processes that may not have
+# this package on their path: ship this module's functions by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _BRANCHES: dict[str, str] = {}
 _ENABLED = False
@@ -33,6 +63,55 @@ def gate(name: str, take_kernel: bool) -> bool:
     take = take_kernel and not FORCE_DISTRIBUTED
     record_branch(name, "kernel" if take else "distributed")
     return take
+
+
+def single_task(
+    df: DataFrame,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    schema,
+) -> DataFrame:
+    """Run ``kernel(pdf)`` once over every row of ``df`` in one task;
+    its returned frame (or nothing, for ``None``) becomes the rows of
+    the result, typed by ``schema``. See the module docstring for the
+    empty-input, null and overflow contract."""
+    name = kernel.__name__
+
+    def run(batches):
+        import pandas as pd
+
+        parts = list(batches)
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        if not len(pdf):
+            return
+        nulls = pdf.columns[pdf.isna().any().to_numpy()].tolist()
+        if nulls:
+            raise ValueError(
+                f"single-task kernel {name}: null in input column(s) {nulls}"
+            )
+        out = kernel(pdf)
+        if out is not None:
+            yield out
+
+    return df.repartition(1).mapInPandas(run, schema)
+
+
+def mul_i64(a, k: int):
+    """``a * k`` for an int64 array (or scalar) ``a`` and an integer
+    ``k``, raising ``OverflowError`` instead of wrapping. The product
+    is monotone in ``a``, so checking the two extremes in exact Python
+    ints covers every element."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.int64)
+    if a.size:
+        ends = (int(a.min()) * k, int(a.max()) * k)
+        if min(ends) < -(2**63) or max(ends) >= 2**63:
+            raise OverflowError(
+                f"int64 multiply by {k} overflows: products reach {ends}"
+            )
+    return a * np.int64(k)
 
 
 def enable() -> None:

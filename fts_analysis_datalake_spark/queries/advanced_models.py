@@ -28,6 +28,7 @@ from fts_analysis_datalake_spark.catalog import (
     ensure_shuffle_parallelism,
     load_table,
 )
+from fts_analysis_datalake_spark.probe import mul_i64
 from fts_analysis_datalake_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -603,11 +604,10 @@ def q_kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounds take over. Measured 2.3 -> ~1.2 s in-suite at sf0.01.
     if probe.gate("kcore", edges.count() <= _KCORE_GATE):
 
-        def peel(batches):
+        def peel(pdf):
             import pandas as pd
 
-            rows = pd.concat(list(batches), ignore_index=True)
-            es = list(zip((int(x) for x in rows["u"]), (int(x) for x in rows["v"])))
+            es = list(zip((int(x) for x in pdf["u"]), (int(x) for x in pdf["v"])))
             for _ in range(6):
                 deg: dict[int, int] = {}
                 for u, v in es:
@@ -619,15 +619,13 @@ def q_kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             for u, v in es:
                 out[u] = out.get(u, 0) + 1
                 out[v] = out.get(v, 0) + 1
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 sorted(out.items()), columns=["node", "core_degree"]
             )
 
-        return (
-            edges.repartition(1)
-            .mapInPandas(peel, schema="node bigint, core_degree bigint")
-            .orderBy("node")
-        )
+        return probe.single_task(
+            edges, peel, "node bigint, core_degree bigint"
+        ).orderBy("node")
     with fixpoint_confs(spark):
         for _ in range(6):
             deg = (
@@ -999,18 +997,12 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Forced branch-equivalence tested. A/B x0.32.
     if probe.gate("textrank", 0 < edges.count() <= _TR_GATE):
 
-        def tr_kernel(batches):
+        def tr_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            if not len(allp):
-                return
-            w1 = np.asarray(allp["w1"].tolist())
-            w2 = np.asarray(allp["w2"].tolist())
+            w1 = np.asarray(pdf["w1"].tolist())
+            w2 = np.asarray(pdf["w2"].tolist())
             src_ = np.concatenate([w1, w2])
             dst_ = np.concatenate([w2, w1])
             nodes, si = np.unique(src_, return_inverse=True)
@@ -1021,15 +1013,13 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             for _ in range(5):
                 contrib = np.zeros(n, dtype=np.int64)
                 np.add.at(contrib, di, pr[si] // deg[si])
-                pr = 150_000_000 + (17 * contrib) // 20
+                pr = 150_000_000 + mul_i64(contrib, 17) // 20
             top = np.lexsort((nodes, -pr))[:15]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"keyword": nodes[top], "textrank": pr[top] / 1e9}
             )
 
-        return edges.repartition(1).mapInPandas(
-            tr_kernel, "keyword string, textrank double"
-        )
+        return probe.single_task(edges, tr_kernel, "keyword string, textrank double")
     direct = edges.select(
         F.col("w1").alias("src"), F.col("w2").alias("dst")
     ).unionAll(edges.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
@@ -2104,14 +2094,8 @@ def q_knapsack_part_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cap = _KS_CAP
 
-    def solve(batches):
-        items: list[tuple[int, int]] = []
-        for pdf in batches:
-            items.extend(
-                (int(v), int(w)) for v, w in zip(pdf["v"], pdf["wt"])
-            )
-        if not items:
-            return
+    def solve(pdf):
+        items = [(int(v), int(w)) for v, w in zip(pdf["v"], pdf["wt"])]
         # replay the oracle's processing order (v DESC, wt ASC)
         items.sort(key=lambda t: (-t[0], t[1]))
         best = [0] * (cap + 1)
@@ -2120,7 +2104,7 @@ def q_knapsack_part_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand = best[w - wt] + v
                 if cand > best[w]:
                     best[w] = cand
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "n_items": [len(items)],
                 "capacity": [cap],
@@ -2131,7 +2115,8 @@ def q_knapsack_part_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return top.repartition(1).mapInPandas(
+    return probe.single_task(
+        top,
         solve,
         "n_items bigint, capacity bigint, best_at_quarter bigint, "
         "best_at_half bigint, best_at_three_quarters bigint, "
@@ -2312,17 +2297,13 @@ def q_stable_matching_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("cents"), F.lit(0)).cast("long").alias("cents"),
         )
     )
-    def gale_shapley(batches):
-        rows = []
-        for pdf in batches:
-            rows.extend(
-                (int(si), int(ci), int(sk), int(ck), int(c))
-                for si, ci, sk, ck, c in zip(
-                    pdf["si"], pdf["ci"], pdf["sk"], pdf["ck"], pdf["cents"]
-                )
+    def gale_shapley(pdf):
+        rows = [
+            (int(si), int(ci), int(sk), int(ck), int(c))
+            for si, ci, sk, ck, c in zip(
+                pdf["si"], pdf["ci"], pdf["sk"], pdf["ck"], pdf["cents"]
             )
-        if not rows:
-            return
+        ]
         cents = {}
         keys = {}
         for si, ci, sk, ck, c in rows:
@@ -2370,12 +2351,13 @@ def q_stable_matching_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             sk, ck = keys[(s, ci)]
             out.append((s, sk, ck, cents[(s, ci)], steps))
         out.sort()
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [(sk, ck, c, st) for _, sk, ck, c, st in out],
             columns=["s_suppkey", "c_custkey", "cents", "n_proposals"],
         )
 
-    return mat.repartition(1).mapInPandas(
+    return probe.single_task(
+        mat,
         gale_shapley,
         "s_suppkey bigint, c_custkey bigint, cents bigint, n_proposals bigint",
     )

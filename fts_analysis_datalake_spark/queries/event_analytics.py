@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import ensure_parallelism, load_table
 from fts_analysis_datalake_spark.functions.deterministic import dsum, sql_dsum
@@ -3584,28 +3585,15 @@ def q_dtw_band_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_cap, band, inf = _DTW_N, _DTW_BAND, _DTW_INF
 
-    def dtw(batches):
-        frames = [pdf for pdf in batches]
-        full = (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(columns=["event_type", "cents", "i"])
-        )
+    def dtw(pdf):
         series = {}
-        for et, grp in full.groupby("event_type"):
+        for et, grp in pdf.groupby("event_type"):
             g = grp.sort_values("i")
             series[et] = [int(x) for x in g["cents"].to_list()]
         a = series.get("view", [])
         b = series.get("purchase", [])
         if len(a) < n_cap or len(b) < n_cap:
-            yield pd.DataFrame(
-                columns=["n_days", "dtw_cents", "euclid_cents",
-                         "elasticity_gain"]
-            ).astype(
-                {"n_days": "int64", "dtw_cents": "int64",
-                 "euclid_cents": "int64", "elasticity_gain": "float64"}
-            )
-            return
+            return None
         a, b = a[:n_cap], b[:n_cap]
         prev: dict = {}
         prev2: dict = {}
@@ -3629,7 +3617,7 @@ def q_dtw_band_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         euclid = sum(abs(x - y) for x, y in zip(a, b))
         import math
 
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "n_days": [n_cap],
                 "dtw_cents": [dd],
@@ -3642,7 +3630,8 @@ def q_dtw_band_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return seq.repartition(1).mapInPandas(
+    return probe.single_task(
+        seq,
         dtw,
         "n_days bigint, dtw_cents bigint, euclid_cents bigint, "
         "elasticity_gain double",
@@ -4044,7 +4033,6 @@ def q_interval_scheduling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB path. Successor ranks strictly increase (end_j > start_j
     >= end_i), so the walk always terminates. Oracle replays the
     same nxt table with a plain per-user WITH RECURSIVE walk."""
-    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.caching import reroot
 
     e = load_table(spark, sf_dir, "events")

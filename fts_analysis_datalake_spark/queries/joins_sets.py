@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import load_table
+from fts_analysis_datalake_spark.probe import mul_i64
 from fts_analysis_datalake_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -1121,23 +1122,15 @@ def q_hits_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (q desc, node-id asc) per-side top-15, replacing per-round
     # eager checkpoints and broadcast-max probe jobs. Forced
     # branch-equivalence tested. A/B x0.38.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("hits", 0 < e0.count() <= _HITS_GATE):
+    if probe.gate("hits", 0 < e0.count() <= _HITS_GATE):
         one, rounds, topk = _HITS_ONE, _HITS_ROUNDS, _HITS_TOPK
 
-        def hits_kernel(batches):
+        def hits_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            p = allp["p"].to_numpy(dtype=np.int64)
-            s = allp["s"].to_numpy(dtype=np.int64)
-            if not len(p):
-                return
+            p = pdf["p"].to_numpy(dtype=np.int64)
+            s = pdf["s"].to_numpy(dtype=np.int64)
             pn, pi = np.unique(p, return_inverse=True)
             sn, si = np.unique(s, return_inverse=True)
             h_ = np.full(len(pn), one, dtype=np.int64)
@@ -1145,13 +1138,13 @@ def q_hits_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             for _ in range(rounds):
                 a_raw = np.zeros(len(sn), dtype=np.int64)
                 np.add.at(a_raw, si, h_[pi])
-                a_ = a_raw * one // a_raw.max()
+                a_ = mul_i64(a_raw, one) // a_raw.max()
                 h_raw = np.zeros(len(pn), dtype=np.int64)
                 np.add.at(h_raw, pi, a_[si])
-                h_ = h_raw * one // h_raw.max()
+                h_ = mul_i64(h_raw, one) // h_raw.max()
             ta = np.lexsort((sn, -a_))[:topk]
             th = np.lexsort((pn, -h_))[:topk]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "kind": ["auth"] * len(ta) + ["hub"] * len(th),
                     "node": [f"s{x}" for x in sn[ta]]
@@ -1162,8 +1155,8 @@ def q_hits_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        return e0.repartition(1).mapInPandas(
-            hits_kernel, "kind string, node string, score double"
+        return probe.single_task(
+            e0, hits_kernel, "kind string, node string, score double"
         )
     e0 = e0.localCheckpoint()
     h = e0.select("p").distinct().select(
@@ -1301,23 +1294,15 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly the distributed round's groupBy + row_number semantics
     # (lexsort is stable; runs are label-ascending within a node).
     # Integer-exact; forced branch-equivalence tested. A/B x0.69.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("lpa", 0 < edges.count() <= _LPA_GATE):
+    if probe.gate("lpa", 0 < edges.count() <= _LPA_GATE):
         rounds, topk = _LPA_ROUNDS, _LPA_TOPK
 
-        def lpa_kernel(batches):
+        def lpa_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            u = allp["u"].to_numpy(dtype=np.int64)
-            v = allp["v"].to_numpy(dtype=np.int64)
-            if not len(u):
-                return
+            u = pdf["u"].to_numpy(dtype=np.int64)
+            v = pdf["v"].to_numpy(dtype=np.int64)
             nodes = np.unique(u)  # symmetric: set(u) == set(v)
             ui = np.searchsorted(nodes, u)
             vi = np.searchsorted(nodes, v)
@@ -1343,12 +1328,12 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lbl = nl
             cnt_l, cnt_c = np.unique(lbl, return_counts=True)
             top = np.lexsort((cnt_l, -cnt_c))[:topk]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"community": cnt_l[top], "n_members": cnt_c[top]}
             )
 
-        return edges.repartition(1).mapInPandas(
-            lpa_kernel, "community bigint, n_members bigint"
+        return probe.single_task(
+            edges, lpa_kernel, "community bigint, n_members bigint"
         )
     edges = edges.localCheckpoint()
     labels = edges.select(F.col("u").alias("node")).distinct().select(
@@ -1457,24 +1442,16 @@ def q_bellman_ford_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min over (u,v,w) of dist[u] + w) as np.minimum.at, source = min
     # node, integer-exact, identical fixpoint to the join loop below.
     # Forced branch-equivalence tested. A/B x0.72.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("bellman_ford", 0 < sym.count() <= _BF_GATE):
+    if probe.gate("bellman_ford", 0 < sym.count() <= _BF_GATE):
         rounds, topk = _BF_ROUNDS, _BF_TOPK
 
-        def bf_kernel(batches):
+        def bf_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            u = allp["u"].to_numpy(dtype=np.int64)
-            v = allp["v"].to_numpy(dtype=np.int64)
-            w = allp["w"].to_numpy(dtype=np.int64)
-            if not len(u):
-                return
+            u = pdf["u"].to_numpy(dtype=np.int64)
+            v = pdf["v"].to_numpy(dtype=np.int64)
+            w = pdf["w"].to_numpy(dtype=np.int64)
             nodes = np.unique(u)  # symmetric: set(u) == set(v)
             ui = np.searchsorted(nodes, u)
             vi = np.searchsorted(nodes, v)
@@ -1489,11 +1466,9 @@ def q_bellman_ford_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
             fin = dist != inf
             dn, dd = nodes[fin], dist[fin]
             top = np.lexsort((dn, dd))[:topk]
-            yield pd.DataFrame({"node": dn[top], "dist": dd[top]})
+            return pd.DataFrame({"node": dn[top], "dist": dd[top]})
 
-        return sym.repartition(1).mapInPandas(
-            bf_kernel, "node bigint, dist bigint"
-        )
+        return probe.single_task(sym, bf_kernel, "node bigint, dist bigint")
     # Weight-0 self-loops make each relaxation round a SINGLE
     # join+min over the edge table (the self-loop row carries the
     # node's current dist), so `dist` is referenced once per round
@@ -1643,12 +1618,10 @@ def q_ktruss_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_sup = _KT_K - 2
     if probe.gate("ktruss", edges.count() <= _KT_GATE):
 
-        def peel(batches):
+        def peel(pdf):
             import pandas as pd
 
-            es = set()
-            for pdf in batches:
-                es.update(zip(pdf["u"].to_list(), pdf["v"].to_list()))
+            es = set(zip(pdf["u"].to_list(), pdf["v"].to_list()))
             for _ in range(rest):
                 adj: dict = {}
                 for u, v in es:
@@ -1659,13 +1632,10 @@ def q_ktruss_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for u, v in es
                     if len(adj[u] & adj[v]) >= min_sup
                 }
-            out = sorted(es)
-            yield pd.DataFrame(out, columns=["u", "v"])
+            return pd.DataFrame(sorted(es), columns=["u", "v"])
 
-        edges = (
-            edges.repartition(1)
-            .mapInPandas(peel, "u bigint, v bigint")
-            .localCheckpoint(eager=True)
+        edges = probe.single_task(edges, peel, "u bigint, v bigint").localCheckpoint(
+            eager=True
         )
     else:
         for _ in range(rest):
@@ -1791,15 +1761,14 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         hops_cap, seed_mod = _HC_HOPS, _HC_SEED_MOD
         mm_block = _HC_MM_BLOCK
 
-        def multi_bfs(batches):
+        def multi_bfs(pdf):
             import numpy as np
             import pandas as pd
 
-            frames = [pdf for pdf in batches]
-            ua = pd.concat([f["u"] for f in frames], ignore_index=True)
-            va = pd.concat([f["v"] for f in frames], ignore_index=True)
-            codes, uniq = pd.factorize(pd.concat([ua, va], ignore_index=True))
-            m = len(ua)
+            codes, uniq = pd.factorize(
+                pd.concat([pdf["u"], pdf["v"]], ignore_index=True)
+            )
+            m = len(pdf)
             ui, vi = codes[:m], codes[m:]
             n = len(uniq)
             adj = np.zeros((n, n), dtype=bool)
@@ -1847,7 +1816,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             h_q = term.sum(axis=0)
             reached = (dist >= 1).sum(axis=0)
             keep = reached > 0
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "node": np.asarray(uniq)[keep],
                     "h_q": h_q[keep],
@@ -1856,14 +1825,9 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         out_type = dict(sym.dtypes)["u"]
-        cent = (
-            sym.repartition(1)
-            .mapInPandas(
-                multi_bfs,
-                f"node {out_type}, h_q bigint, n_seeds_reached bigint",
-            )
-            .localCheckpoint(eager=True)
-        )
+        cent = probe.single_task(
+            sym, multi_bfs, f"node {out_type}, h_q bigint, n_seeds_reached bigint"
+        ).localCheckpoint(eager=True)
         return (
             cent.select(
                 "node",
@@ -1989,7 +1953,6 @@ def q_functional_graph_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a trillion rows, each a single hash-join shuffle; the
     rerooted lineage keeps plans constant-size (caching.reroot, the
     self-join loop lesson)."""
-    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.caching import reroot
 
     o = load_table(spark, sf_dir, "orders")
@@ -2006,17 +1969,12 @@ def q_functional_graph_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     if probe.gate("functional_rho", 0 < n <= _FG_GATE):
         nn = n
 
-        def rho_kernel(batches):
+        def rho_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            consumed = False
-            for _ in batches:
-                consumed = True
-            if not consumed:
-                return
             v = np.arange(nn, dtype=np.int64)
-            J = (_FG_A * v + _FG_C) % nn
+            J = (mul_i64(v, _FG_A) + _FG_C) % nn
             M = np.minimum(v, J)
             for _ in range(max((nn - 1).bit_length(), 1)):
                 M = np.minimum(M, M[J])
@@ -2031,19 +1989,15 @@ def q_functional_graph_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
                 clen = int((mask & cyc).sum())
                 out.append((int(c), total, clen, total - clen))
             out.sort()
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 out,
                 columns=["comp_id", "n_nodes", "cycle_len", "tree_size"],
             )
 
-        return (
-            o.sparkSession.range(1)
-            .repartition(1)
-            .mapInPandas(
-                rho_kernel,
-                "comp_id bigint, n_nodes bigint, cycle_len bigint, "
-                "tree_size bigint",
-            )
+        return probe.single_task(
+            o.sparkSession.range(1),
+            rho_kernel,
+            "comp_id bigint, n_nodes bigint, cycle_len bigint, tree_size bigint",
         )
 
     w = Window.orderBy("o_orderkey")
@@ -2275,19 +2229,14 @@ def q_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tested). The 5-join level pipeline below stays the else-branch
     # and the 100 TB path (its per-level scheduling floor made this
     # the suite's second-slowest query, 8.5 s at sf0.1).
-    from fts_analysis_datalake_spark import probe as _probe
+    if probe.gate("betweenness", 0 < n_nodes <= _BC_NODE_GATE):
 
-    if _probe.gate("betweenness", 0 < n_nodes <= _BC_NODE_GATE):
-
-        def brandes(batches):
+        def brandes(pdf):
             import pandas as pd
 
             adj: dict = {}
-            for pdf in batches:
-                for u, v in zip(pdf["u"], pdf["v"]):
-                    adj.setdefault(int(u), []).append(int(v))
-            if not adj:
-                return
+            for u, v in zip(pdf["u"], pdf["v"]):
+                adj.setdefault(int(u), []).append(int(v))
             seeds_ = sorted(
                 x for x in adj if x % _BC_SEED_MOD == 1
             )
@@ -2328,14 +2277,13 @@ def q_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ((v, bq[v], contribs.get(v, 0)) for v in bq),
                 key=lambda r: (-r[1], r[0]),
             )[:20]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 [(v, b / 1e6, c) for v, b, c in top],
                 columns=["node", "betweenness", "n_seed_contribs"],
             )
 
-        return sym.repartition(1).mapInPandas(
-            brandes,
-            "node bigint, betweenness double, n_seed_contribs bigint",
+        return probe.single_task(
+            sym, brandes, "node bigint, betweenness double, n_seed_contribs bigint"
         )
 
     seeds = (
@@ -2609,24 +2557,16 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch-equivalence is tested (integer-exact). Interleaved A/B
     # x0.64 for the matvec kernel, a further x0.88 for the in-kernel
     # backbone.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("katz", 0 < pairs.count() <= _KZ_GATE):
+    if probe.gate("katz", 0 < pairs.count() <= _KZ_GATE):
         cap, bb = _KZ_CAP, _BB_DEG
 
-        def katz_kernel(batches):
+        def katz_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            pu = allp["u"].to_numpy(dtype=np.int64)
-            pv = allp["v"].to_numpy(dtype=np.int64)
-            pw = allp["w"].to_numpy(dtype=np.int64)
-            if not len(pu):
-                return
+            pu = pdf["u"].to_numpy(dtype=np.int64)
+            pv = pdf["v"].to_numpy(dtype=np.int64)
+            pw = pdf["w"].to_numpy(dtype=np.int64)
             # backbone + undirect in numpy: per-node top-bb incident
             # edges by (w desc, other asc) — the _backbone_edges
             # window order — canonical (min, max) dedup, then both
@@ -2661,9 +2601,9 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise ValueError("katz: path count exceeds cap")
             p3 = np.zeros(n, dtype=np.int64)
             np.add.at(p3, vi, p2[ui])
-            kq = 64 * p1 + 8 * p2 + p3
+            kq = mul_i64(p1, 64) + mul_i64(p2, 8) + p3
             top = np.lexsort((nodes, -kq))[:20]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "node": nodes[top],
                     "katz": kq[top] / 512.0,
@@ -2673,7 +2613,8 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        return pairs.repartition(1).mapInPandas(
+        return probe.single_task(
+            pairs,
             katz_kernel,
             "node bigint, katz double, paths_1 bigint, "
             "paths_2 bigint, paths_3 bigint",

@@ -1680,13 +1680,12 @@ def q_greedy_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     if probe.gate("set_cover", n_dt < _COVER_GATE):
         rounds = _COVER_ROUNDS
 
-        def greedy(iters):
+        def greedy(pdf):
             import pandas as pd
 
             docs: dict[int, set] = {}
-            for pdf in iters:
-                for did, t in zip(pdf["doc_id"], pdf["t"]):
-                    docs.setdefault(int(did), set()).add(t)
+            for did, t in zip(pdf["doc_id"], pdf["t"]):
+                docs.setdefault(int(did), set()).add(t)
             covered: set = set()
             out = []
             for i in range(1, rounds + 1):
@@ -1701,11 +1700,9 @@ def q_greedy_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     break
                 covered |= docs[best_id]
                 out.append((i, best_id, best_gain))
-            yield pd.DataFrame(out, columns=["rnd", "doc_id", "gain"])
+            return pd.DataFrame(out, columns=["rnd", "doc_id", "gain"])
 
-        allp = dt.repartition(1).mapInPandas(
-            greedy, "rnd int, doc_id bigint, gain bigint"
-        )
+        allp = probe.single_task(dt, greedy, "rnd int, doc_id bigint, gain bigint")
         allp = allp.select(
             "rnd", "doc_id", F.col("gain").cast("bigint").alias("gain")
         ).localCheckpoint(eager=True)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import ensure_parallelism, load_table
 from fts_analysis_datalake_spark.operators.dedup import (
@@ -32,6 +33,7 @@ from fts_analysis_datalake_spark.operators.text import (
     sql_tokens,
     tokens,
 )
+from fts_analysis_datalake_spark.probe import mul_i64
 from fts_analysis_datalake_spark.queries.sketches_search import _h52, _sql_h52
 from fts_analysis_datalake_spark.registry import query
 
@@ -1355,23 +1357,15 @@ def q_pagerank_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-state each round exactly as the groupBy(v) loop does, and the
     # top-20 tie-break on the LABEL STRING is replicated with an ASCII
     # U-dtype lexsort. Forced branch-equivalence tested. A/B x0.57.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("pagerank_quantized", 0 < sym.count() <= _PRQ_GATE):
+    if probe.gate("pagerank_quantized", 0 < sym.count() <= _PRQ_GATE):
         one, base_, rounds, topk = _PRQ_ONE, _PRQ_BASE, _PRQ_ROUNDS, _PRQ_TOPK
 
-        def prq_kernel(batches):
+        def prq_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            u = allp["u"].to_numpy(dtype=np.int64)
-            v = allp["v"].to_numpy(dtype=np.int64)
-            if not len(u):
-                return
+            u = pdf["u"].to_numpy(dtype=np.int64)
+            v = pdf["v"].to_numpy(dtype=np.int64)
             nodes, ui = np.unique(u, return_inverse=True)
             vi = np.searchsorted(nodes, v)  # symmetric: same node set
             deg = np.bincount(ui, minlength=len(nodes)).astype(np.int64)
@@ -1379,7 +1373,7 @@ def q_pagerank_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             for _ in range(rounds):
                 s = np.zeros(len(nodes), dtype=np.int64)
                 np.add.at(s, vi, r[ui] // deg[ui])
-                r = base_ + (85 * s) // 100
+                r = base_ + mul_i64(s, 85) // 100
             labels = np.asarray(
                 [
                     f"p{x // 2}" if x % 2 == 0 else f"s{(x - 1) // 2}"
@@ -1387,11 +1381,9 @@ def q_pagerank_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
             top = np.lexsort((labels, -r))[:topk]
-            yield pd.DataFrame({"node": labels[top], "rank": r[top] / 1e9})
+            return pd.DataFrame({"node": labels[top], "rank": r[top] / 1e9})
 
-        return sym.repartition(1).mapInPandas(
-            prq_kernel, "node string, rank double"
-        )
+        return probe.single_task(sym, prq_kernel, "node string, rank double")
     edges = sym.localCheckpoint()
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     edges_deg = edges.join(deg, "u").localCheckpoint()
@@ -2037,23 +2029,15 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reachability, as rows do in the join), and the top-20 tie-break
     # is (r_q desc, numeric id asc) as in the distributed orderBy.
     # Forced branch-equivalence tested. A/B x0.57.
-    from fts_analysis_datalake_spark import probe as _probe
-
-    if _probe.gate("personalized_pagerank", 0 < sym.count() <= _PPR_GATE):
+    if probe.gate("personalized_pagerank", 0 < sym.count() <= _PPR_GATE):
         one, base_, rounds, topk = _PPR_ONE, _PPR_BASE, _PPR_ROUNDS, _PPR_TOPK
 
-        def ppr_kernel(batches):
+        def ppr_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            u = allp["u"].to_numpy(dtype=np.int64)
-            v = allp["v"].to_numpy(dtype=np.int64)
-            if not len(u):
-                return
+            u = pdf["u"].to_numpy(dtype=np.int64)
+            v = pdf["v"].to_numpy(dtype=np.int64)
             nodes, ui = np.unique(u, return_inverse=True)
             vi = np.searchsorted(nodes, v)  # symmetric: same node set
             n = len(nodes)
@@ -2069,7 +2053,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 got = np.zeros(n, dtype=bool)
                 got[vi[am]] = True
                 new_reached = got | seed_mask
-                r = np.where(new_reached, base_arr + (85 * contrib) // 100, 0)
+                r = np.where(new_reached, base_arr + mul_i64(contrib, 85) // 100, 0)
                 reached = new_reached
             idx = np.flatnonzero(reached)
             rr, nid = r[idx], nodes[idx]
@@ -2079,12 +2063,12 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"p{x // 2}" if x % 2 == 0 else f"s{(x - 1) // 2}"
                 for x in sel_n
             ]
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"node": labels, "is_seed": sel_s, "rank": sel_r / 1e9}
             )
 
-        return sym.repartition(1).mapInPandas(
-            ppr_kernel, "node string, is_seed boolean, rank double"
+        return probe.single_task(
+            sym, ppr_kernel, "node string, is_seed boolean, rank double"
         )
     edges = sym.localCheckpoint()
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))

@@ -1517,17 +1517,15 @@ def q_greedy_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     if probe.gate("greedy_segmentation", docs.count() <= _GLM_GATE):
         prefix = _GLM_PREFIX
 
-        def seg(iters):
+        def seg(pdf):
             import pandas as pd
 
             # Single bounded task sees the whole corpus, so the
             # vocabulary is built here too (one in-memory pass)
             # instead of a separate Spark scan+distinct+collect.
-            frames = [pdf for pdf in iters]
             vset: set = set()
-            for pdf in frames:
-                for text in pdf["text"]:
-                    vset.update(text.split(" "))
+            for text in pdf["text"]:
+                vset.update(text.split(" "))
             vset.discard("")
             by_len = sorted({len(w) for w in vset}, reverse=True)
             max_wl = by_len[0] if by_len else 1
@@ -1538,44 +1536,36 @@ def q_greedy_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # loop is one slice + one dict hit per TOKEN.
             memo: dict = {}
             out = []
-            for pdf in frames:
-                for did, text, source in zip(
-                    pdf["doc_id"], pdf["text"], pdf["source"]
-                ):
-                    s = text.replace(" ", "")[:prefix]
-                    if not s:
-                        # mirror the walk's length(s) >= 1 anchor and
-                        # the doubled-join branch (no pos=1 row): an
-                        # empty de-spaced prefix contributes no doc
-                        continue
-                    pos, n_tok, n_fb = 0, 0, 0
-                    while pos < len(s):
-                        win = s[pos : pos + max_wl]
-                        hit = memo.get(win)
-                        if hit is None:
-                            hit = (1, 1)
-                            for wl in by_len:
-                                cand = win[:wl]
-                                if len(cand) == wl and cand in vset:
-                                    hit = (wl, 0)
-                                    break
-                            memo[win] = hit
-                        pos += hit[0]
-                        n_tok += 1
-                        n_fb += hit[1]
-                    out.append((source, int(did), n_tok, n_fb))
-            yield pd.DataFrame(
-                out, columns=["source", "doc_id", "n_tok", "n_fb"]
-            )
+            for did, text, source in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
+                s = text.replace(" ", "")[:prefix]
+                if not s:
+                    # mirror the walk's length(s) >= 1 anchor and the
+                    # doubled-join branch (no pos=1 row): an empty
+                    # de-spaced prefix contributes no doc
+                    continue
+                pos, n_tok, n_fb = 0, 0, 0
+                while pos < len(s):
+                    win = s[pos : pos + max_wl]
+                    hit = memo.get(win)
+                    if hit is None:
+                        hit = (1, 1)
+                        for wl in by_len:
+                            cand = win[:wl]
+                            if len(cand) == wl and cand in vset:
+                                hit = (wl, 0)
+                                break
+                        memo[win] = hit
+                    pos += hit[0]
+                    n_tok += 1
+                    n_fb += hit[1]
+                out.append((source, int(did), n_tok, n_fb))
+            return pd.DataFrame(out, columns=["source", "doc_id", "n_tok", "n_fb"])
 
-        per_doc = (
-            docs.select("doc_id", "text", "source")
-            .repartition(1)
-            .mapInPandas(
-                seg, "source string, doc_id bigint, n_tok long, n_fb long"
-            )
-            .localCheckpoint(eager=True)
-        )
+        per_doc = probe.single_task(
+            docs.select("doc_id", "text", "source"),
+            seg,
+            "source string, doc_id bigint, n_tok long, n_fb long",
+        ).localCheckpoint(eager=True)
         return (
             per_doc.groupBy("source")
             .agg(
@@ -1849,13 +1839,10 @@ def q_huffman_code_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     syms = top.unionAll(tail)
 
-    def huff(batches):
-        fs = []
-        for pdf in batches:
-            fs.extend(int(x) for x in pdf["f"])
-        if not fs:
-            return
+    def huff(pdf):
         import math
+
+        fs = [int(x) for x in pdf["f"]]
 
         n = sum(fs)
         v = len(fs)
@@ -1869,7 +1856,7 @@ def q_huffman_code_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             b = heapq.heappop(fs)
             bits += a + b
             heapq.heappush(fs, a + b)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "n_symbols": [v],
                 "total_tokens": [n],
@@ -1882,7 +1869,8 @@ def q_huffman_code_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return syms.repartition(1).mapInPandas(
+    return probe.single_task(
+        syms,
         huff,
         "n_symbols bigint, total_tokens bigint, huffman_bits bigint, "
         "entropy_bits double, fixed_bits bigint, bits_per_token double",

@@ -14,6 +14,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import load_table
 from fts_analysis_datalake_spark.functions.deterministic import dsum, sql_dsum
@@ -489,22 +490,15 @@ def _kmq_single_task(q: DataFrame) -> DataFrame:
     error and DuckDB's HUGEINT->BIGINT cast error, instead of numpy's
     silent wrap)."""
 
-    def lloyd(batches):
+    def lloyd(pdf):
         import numpy as np
         import pandas as pd
 
-        ids: list[int] = []
-        rows: list[list[int]] = []
-        for pdf in batches:
-            ids.extend(int(x) for x in pdf["vec_id"])
-            rows.extend([int(v) for v in vec] for vec in pdf["q"])
-        if not ids:
-            return
-        idarr = np.asarray(ids, dtype=np.int64)
-        mat = np.asarray(rows, dtype=np.int64)
+        idarr = np.asarray([int(x) for x in pdf["vec_id"]], dtype=np.int64)
+        mat = np.asarray([[int(v) for v in vec] for vec in pdf["q"]], dtype=np.int64)
         seed_ids = np.sort(idarr[idarr < _KMQ_K])
         if seed_ids.size == 0:
-            return
+            return None
         cids = [int(c) for c in seed_ids]
         cents = np.stack(
             [mat[np.flatnonzero(idarr == c)[0]] for c in cids]
@@ -559,11 +553,12 @@ def _kmq_single_task(q: DataFrame) -> DataFrame:
                 )
             out.append((cid, nj, tot, int(cents[j].sum())))
         out.sort()
-        yield pd.DataFrame(
+        return pd.DataFrame(
             out, columns=["cid", "n_vectors", "total_qdist", "cent_sum"]
         )
 
-    return q.repartition(1).mapInPandas(
+    return probe.single_task(
+        q,
         lloyd,
         "cid bigint, n_vectors bigint, total_qdist bigint, cent_sum bigint",
     )
@@ -612,8 +607,7 @@ def q_kmeans_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop-empty-cluster semantics, so the outputs are bit-identical
     # (forced branch-equivalence: tests/test_algorithms.py). The
     # distributed loop stays the else-branch and the 100 TB path.
-    n_vecs = q.count()
-    if 0 < n_vecs <= _KMQ_FINISH_ROWS:
+    if probe.gate("kmeans_quantized", 0 < q.count() <= _KMQ_FINISH_ROWS):
         return _kmq_single_task(q)
 
     cents = q.filter(F.col("vec_id") < _KMQ_K).select(
@@ -1547,15 +1541,14 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_scale = float(_PCA_Q)
     iters = _PCA_ITERS
 
-    def power_iter(batches):
+    def power_iter(pdf):
         import math
 
         import pandas as pd
 
-        rows = pd.concat(list(batches), ignore_index=True)
         cells = [
             (int(i), int(j), float(aq))
-            for i, j, aq in zip(rows["i"], rows["j"], rows["aq"])
+            for i, j, aq in zip(pdf["i"], pdf["j"], pdf["aq"])
         ]
         dims = sorted({i for i, _, _ in cells})
         v = {j: 1.0 for j in dims}
@@ -1589,12 +1582,11 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             math.floor(float(num_q) / float(den_q) / q_scale * 1e6 + 0.5) / 1e6
         )
         out = [(j, v[j], eig) for j in dims]
-        yield pd.DataFrame(out, columns=["dim", "loading", "eigenvalue"])
+        return pd.DataFrame(out, columns=["dim", "loading", "eigenvalue"])
 
     return (
-        cov.repartition(1)
-        .mapInPandas(
-            power_iter, schema="dim bigint, loading double, eigenvalue double"
+        probe.single_task(
+            cov, power_iter, "dim bigint, loading double, eigenvalue double"
         )
         .orderBy(F.abs(F.col("loading")).desc(), "dim")
         .limit(_PCA_TOPD)

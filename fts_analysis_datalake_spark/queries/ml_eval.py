@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import ensure_parallelism, load_table
 from fts_analysis_datalake_spark.functions.deterministic import dsum, sql_dsum
@@ -1699,20 +1700,16 @@ def q_bradley_terry_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a BIGINT before the (order-free) integer sum, s_raw one double
     # division, per-round re-quantize + sum-normalize — identical op
     # order to the unrolled-CTE oracle.
-    def mm_rounds(batches):
+    def mm_rounds(pdf):
         import math
 
         import pandas as pd
 
-        rows = pd.concat(list(batches), ignore_index=True)
         duel = [
             (i, j, float(n))
-            for i, j, n in zip(rows["i"], rows["j"], rows["n_ij"])
+            for i, j, n in zip(pdf["i"], pdf["j"], pdf["n_ij"])
         ]
-        wi = {}
-        for i, w_ in zip(rows["i"], rows["wi"]):
-            if w_ == w_ and w_ is not None:  # left-join null -> 0.0
-                wi[i] = float(w_)
+        wi = {i: float(w_) for i, w_ in zip(pdf["i"], pdf["wi"])}
         s = {i: 1.0 for i, _, _ in duel}
         for _ in range(_BT_ITERS):
             den_q: dict[str, int] = {i: 0 for i in s}
@@ -1721,7 +1718,7 @@ def q_bradley_terry_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
             sq = {
                 i: int(
                     math.floor(
-                        wi.get(i, 0.0) / (den_q[i] / 1e9) * _BT_Q + 0.5
+                        wi[i] / (den_q[i] / 1e9) * _BT_Q + 0.5
                     )
                 )
                 for i in s
@@ -1733,12 +1730,13 @@ def q_bradley_terry_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = [
             (i, math.floor(v * 1e6 + 0.5) / 1e6) for i, v in s.items()
         ]
-        yield pd.DataFrame(out, columns=["event_type", "bt_strength"])
+        return pd.DataFrame(out, columns=["event_type", "bt_strength"])
 
-    bt_in = duels.join(F.broadcast(wins), "i", "left")
+    # a type that never wins has no `wins` row: its left-join null is
+    # the 0.0 win total the MM update uses
+    bt_in = duels.join(F.broadcast(wins), "i", "left").fillna(0.0, ["wi"])
     return (
-        bt_in.repartition(1)
-        .mapInPandas(mm_rounds, schema="event_type string, bt_strength double")
+        probe.single_task(bt_in, mm_rounds, "event_type string, bt_strength double")
         .orderBy(F.col("bt_strength").desc(), "event_type")
     )
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import load_table
 from fts_analysis_datalake_spark.functions.deterministic import dcorr, sql_dcorr
@@ -477,15 +478,11 @@ def q_logistic_newton_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
     )
 
-    def newton(batches):
-        bins: list[tuple[float, int, int]] = []
-        for pdf in batches:
-            bins.extend(
-                (float(x), int(m), int(s))
-                for x, m, s in zip(pdf["x"], pdf["m"], pdf["s"])
-            )
-        if not bins:
-            return
+    def newton(pdf):
+        bins = [
+            (float(x), int(m), int(s))
+            for x, m, s in zip(pdf["x"], pdf["m"], pdf["s"])
+        ]
 
         def q6(v: float) -> int:
             return int(math.floor(v * 1000000 + 0.5))
@@ -511,12 +508,12 @@ def q_logistic_newton_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / 1000000.0
         )
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {"beta0": [b0], "beta1": [b1], "p_at_top_decile": [p_top]}
         )
 
-    return binned.repartition(1).mapInPandas(
-        newton, "beta0 double, beta1 double, p_at_top_decile double"
+    return probe.single_task(
+        binned, newton, "beta0 double, beta1 double, p_at_top_decile double"
     )
 
 
@@ -934,15 +931,12 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays bit-identical to the unrolled-CTE oracle while replacing
     # 24 scheduled join+agg rounds (~5 s of pure stage overhead
     # locally) with one task.
-    def absorb(batches):
+    def absorb(pdf):
         import pandas as pd
 
-        rows = pd.concat(list(batches), ignore_index=True)
         edges: dict[str, list[tuple[str, str, int]]] = {}
         states: dict[str, set[str]] = {}
-        for sc, s, t, p_q in zip(
-            rows["sc"], rows["s"], rows["t"], rows["p_q"]
-        ):
+        for sc, s, t, p_q in zip(pdf["sc"], pdf["s"], pdf["t"], pdf["p_q"]):
             edges.setdefault(sc, []).append((s, t, int(p_q)))
             states.setdefault(sc, set()).add(s)
         out = []
@@ -957,11 +951,9 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                         nv[s] += (p_q * v.get(t, 0)) // 1_000_000_000
                 v = nv
             out.extend((sc, s, val) for s, val in v.items())
-        yield pd.DataFrame(out, columns=["sc", "s", "v"])
+        return pd.DataFrame(out, columns=["sc", "s", "v"])
 
-    conv = sp.repartition(1).mapInPandas(
-        absorb, schema="sc string, s string, v bigint"
-    )
+    conv = probe.single_task(sp, absorb, "sc string, s string, v bigint")
     final = conv.filter(F.col("s") == "start").select("sc", "v")
     full = final.filter(F.col("sc") == "full").select(
         F.col("v").alias("v_full")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import load_table
 from fts_analysis_datalake_spark.operators.graphs import connected_components_star
@@ -248,8 +249,6 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     21 medians, one join-back for the losses — embarrassingly
     parallel over slope candidates, which is exactly how you'd sweep
     a hyperparameter at 100 TB."""
-    from fts_analysis_datalake_spark import probe
-
     e = load_table(spark, sf_dir, "events")
     # r12 (guide §4.2): under the point-count gate the whole 21-slope
     # sweep runs in ONE bounded task — per slope an exact lower median
@@ -265,24 +264,13 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("y"),
         )
 
-        def qr_kernel(batches):
+        def qr_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            if allp["x"].isna().any():
-                # the distributed branch would sort NULL residuals
-                # first; the fixture's props.k is never null — fail
-                # loud rather than silently diverge
-                raise ValueError("quantile grid: null feature x")
-            x = allp["x"].to_numpy(dtype=np.int64)
-            y = allp["y"].to_numpy(dtype=np.int64)
+            x = pdf["x"].to_numpy(dtype=np.int64)
+            y = pdf["y"].to_numpy(dtype=np.int64)
             m = len(x)
-            if m == 0:
-                return
             k = (m + 1) // 2 - 1  # 0-based lower-median rank
             best = None  # (loss, b, a)
             for b in range(-50, 51, 5):
@@ -292,7 +280,7 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if best is None or loss < best[0]:
                     best = (loss, b, a)
             loss, b, a = best
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "slope_cents_per_k": [b],
                     "intercept_cents": [a],
@@ -300,7 +288,8 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        return qpts.repartition(1).mapInPandas(
+        return probe.single_task(
+            qpts,
             qr_kernel,
             "slope_cents_per_k bigint, intercept_cents bigint, "
             "abs_loss_total double",
@@ -422,15 +411,14 @@ def q_ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale is the same two-division double sequence, and w_q is
     # re-floored to a BIGINT after every pass — identical integer
     # states round for round on all three engines.
-    def rake(batches):
+    def rake(pdf):
         import math
 
         import pandas as pd
 
-        rows = pd.concat(list(batches), ignore_index=True)
         cell = [
             (lg, src, int(n))
-            for lg, src, n in zip(rows["lang"], rows["source"], rows["n"])
+            for lg, src, n in zip(pdf["lang"], pdf["source"], pdf["n"])
         ]
         nt = sum(n for _, _, n in cell)
         nl = len({lg for lg, _, _ in cell})
@@ -455,15 +443,11 @@ def q_ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = [
             (lg, src, n, w[(lg, src)] / 1_000_000_000.0) for lg, src, n in cell
         ]
-        yield pd.DataFrame(out, columns=["lang", "source", "n", "weight"])
+        return pd.DataFrame(out, columns=["lang", "source", "n", "weight"])
 
-    return (
-        cells.repartition(1)
-        .mapInPandas(
-            rake, schema="lang string, source string, n bigint, weight double"
-        )
-        .orderBy("lang", "source")
-    )
+    return probe.single_task(
+        cells, rake, "lang string, source string, n bigint, weight double"
+    ).orderBy("lang", "source")
 
 
 # --------------------------------------------------------------------------
@@ -1208,8 +1192,6 @@ def q_ransac_price_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side), one 64-row aggregate — RANSAC's data pass is
     embarrassingly parallel, which is why it survives 100 TB while
     leverage-based fits need the full design matrix."""
-    from fts_analysis_datalake_spark import probe
-
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     h = F.md5(
@@ -1255,22 +1237,18 @@ def q_ransac_price_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         both = bare.unionByName(samp)
 
-        def rs_kernel(batches):
+        def rs_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            is_s = allp["is_s"].to_numpy()
+            is_s = pdf["is_s"].to_numpy()
             pm = is_s == 0
-            x = allp["x"].to_numpy(dtype=np.int64)[pm]
-            y = allp["y"].to_numpy(dtype=np.int64)[pm]
+            x = pdf["x"].to_numpy(dtype=np.int64)[pm]
+            y = pdf["y"].to_numpy(dtype=np.int64)[pm]
             sm = ~pm
-            sh_ = allp["h"].to_numpy(dtype="U32")[sm]  # md5 hex: ASCII == binary order
-            sx0 = allp["x"].to_numpy(dtype=np.int64)[sm]
-            sy0 = allp["y"].to_numpy(dtype=np.int64)[sm]
+            sh_ = pdf["h"].to_numpy(dtype="U32")[sm]  # md5 hex: ASCII == binary order
+            sx0 = pdf["x"].to_numpy(dtype=np.int64)[sm]
+            sy0 = pdf["y"].to_numpy(dtype=np.int64)[sm]
             order = np.lexsort((sy0, sx0, sh_))
             sx, sy = sx0[order], sy0[order]
             best = None  # (n_inliers, t, x1, y1, dx, dy)
@@ -1288,9 +1266,9 @@ def q_ransac_price_line(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if best is None or n_in > best[0]:
                     best = (n_in, t_i + 1, x1, y1, dx, dy)
             if best is None:
-                return
+                return None
             n_in, t, x1, y1, dx, dy = best
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "trial": [t],
                     "n_points": [n],
@@ -1303,7 +1281,8 @@ def q_ransac_price_line(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        return both.repartition(1).mapInPandas(
+        return probe.single_task(
+            both,
             rs_kernel,
             "trial bigint, n_points bigint, n_inliers bigint, "
             "inlier_frac double, slope_num bigint, slope_den bigint, "

@@ -29,6 +29,7 @@ from fts_analysis_datalake_spark.operators.text import (
     sql_tokens,
     tokens,
 )
+from fts_analysis_datalake_spark.probe import mul_i64
 from fts_analysis_datalake_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -3779,25 +3780,13 @@ def q_lof_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         kk, lrd_scale, chunk = _LOF_K, _LOF_LRD, 1024
 
-        def lof_kernel(batches):
+        def lof_kernel(pdf):
             import numpy as np
             import pandas as pd
 
-            parts = [pdf for pdf in batches]
-            if not parts:
-                return
-            allp = pd.concat(parts)
-            # ADVICE r11: a NULL event_type would make the mixed
-            # None/str np.unique sort raise; the distributed branch
-            # tolerates a null group — drop the same rows it would
-            # keep as their own group only if the generator ever
-            # emitted one (it does not; this keeps the kernel from
-            # crashing rather than changing any current result).
-            nn = pd.notna(allp["et"]).to_numpy()
-            allp = allp[nn] if not nn.all() else allp
-            et_all = allp["et"].to_numpy()
-            hs_all = allp["hs"].to_numpy(dtype=np.int64)
-            x_all = allp["x"].to_numpy(dtype=np.int64)
+            et_all = pdf["et"].to_numpy()
+            hs_all = pdf["hs"].to_numpy(dtype=np.int64)
+            x_all = pdf["x"].to_numpy(dtype=np.int64)
             out = []
             sentinel = np.iinfo(np.int64).max
             for g in np.unique(et_all):
@@ -3822,18 +3811,15 @@ def q_lof_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
                 kd = dnb[:, -1]  # k-distance per point
                 reach = np.maximum(dnb, kd[idx])
                 lrd = lrd_scale // np.maximum(reach.sum(axis=1), 1)
-                lof_q = (10**9 * lrd[idx].sum(axis=1)) // (
+                lof_q = mul_i64(lrd[idx].sum(axis=1), 10**9) // (
                     kk * np.maximum(lrd, 1)
                 )
                 out.append(
                     pd.DataFrame({"et": g, "hs": gh, "lof_q": lof_q})
                 )
-            if out:
-                yield pd.concat(out)
+            return pd.concat(out) if out else None
 
-        lof = pts.repartition(1).mapInPandas(
-            lof_kernel, "et string, hs bigint, lof_q bigint"
-        )
+        lof = probe.single_task(pts, lof_kernel, "et string, hs bigint, lof_q bigint")
     else:
         a = pts.select("et", F.col("hs").alias("ha"), F.col("x").alias("xa"))
         b = pts.select("et", F.col("hs").alias("hb"), F.col("x").alias("xb"))

@@ -19,19 +19,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+from fts_analysis_datalake_spark.catalog import _RUNTIME_CONFS
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """Apply engine configs to a builder (shared by get_spark and tests)."""
+    """Apply engine configs to a builder (shared by get_spark and tests):
+    the runtime SQL confs catalog.load_table also sets on a foreign
+    session, plus driver memory, UI off and the parquet codec."""
     return (
-        builder.config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        builder.config(map=_RUNTIME_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

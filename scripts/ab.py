@@ -1,10 +1,16 @@
 """Interleaved same-process A/B timing of registry queries vs candidate
-rewrites (scripts/alt_impls.py), per the round's measurement protocol:
-noop sink, clean caches between runs, ABAB interleave so machine drift
-hits both arms, q1 anchor bracketing.
+rewrites, per the round's measurement protocol: noop sink, clean caches
+between runs, ABAB interleave so machine drift hits both arms, q1 anchor
+bracketing.
 
-    python scripts/ab.py q_bm25_scoring q_ndcg_label_retrieval
-    python scripts/ab.py --reps 3 --verify q_bm25_scoring
+The candidates are a Python file defining, for each named query, a
+function with the registry query's signature ``(spark, sf_dir)``:
+
+    python scripts/ab.py --candidates cand.py q_bm25_scoring q_ndcg_label_retrieval
+    python scripts/ab.py --candidates cand.py --reps 3 --verify q_bm25_scoring
+
+Earlier rounds' candidate archive is in git history as
+scripts/alt_impls.py (``git log -- scripts/alt_impls.py``).
 
 --verify additionally collects both arms' outputs (sorted) and asserts
 they are identical row-for-row before timing.
@@ -14,13 +20,13 @@ from __future__ import annotations
 
 import argparse
 import gc
+import importlib.util
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from fts_analysis_datalake_spark.caching import release_tracked
 from fts_analysis_datalake_spark.registry import REGISTRY, _load_all
@@ -33,9 +39,16 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--verify", action="store_true")
     ap.add_argument("--out", default=None)
+    ap.add_argument(
+        "--candidates",
+        required=True,
+        help="Python file defining one candidate function per query name",
+    )
     args = ap.parse_args()
 
-    import alt_impls
+    spec = importlib.util.spec_from_file_location("ab_candidates", args.candidates)
+    candidates = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(candidates)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _load_all()
@@ -60,7 +73,7 @@ def main() -> int:
     out: dict[str, dict] = {}
     for name in args.names:
         old_fn = REGISTRY[name].fn
-        new_fn = getattr(alt_impls, name)
+        new_fn = getattr(candidates, name)
         if args.verify:
             a = sorted(map(tuple, old_fn(spark, sf_dir).collect()))
             clean()

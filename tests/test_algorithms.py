@@ -600,9 +600,12 @@ def test_delta_encoding_bits_match_python_replay(spark):
 def test_count_gated_branches_agree(spark, monkeypatch):
     """The count-gated single-task kernels and their distributed
     else-branches (the 100 TB paths) must produce IDENTICAL results —
-    force the else-branch by patching each gate to 0 and compare
-    against the kernel output on the same fixture. All four queries
-    are integer-exact, so equality is exact, not approximate."""
+    force the else-branch by patching each gate constant to 0 and
+    compare against the kernel output on the same fixture. Every case
+    is integer-exact, so equality is exact, not approximate. The probe
+    record must show each constant really routes: its gate takes the
+    kernel before the patch and the distributed branch after."""
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.queries import (
         advanced_models,
         event_analytics,
@@ -618,82 +621,88 @@ def test_count_gated_branches_agree(spark, monkeypatch):
 
     _load_all()
     cases = [
-        ("q_greedy_segmentation", llm_text, "_GLM_GATE"),
-        ("q_kcore_suppliers", advanced_models, "_KCORE_GATE"),
-        ("q_ktruss_parts", joins_sets, "_KT_GATE"),
-        ("q_harmonic_centrality", joins_sets, "_HC_GATE"),
+        ("q_greedy_segmentation", llm_text, "_GLM_GATE", "greedy_segmentation"),
+        ("q_kcore_suppliers", advanced_models, "_KCORE_GATE", "kcore"),
+        ("q_ktruss_parts", joins_sets, "_KT_GATE", "ktruss"),
+        ("q_harmonic_centrality", joins_sets, "_HC_GATE", "harmonic"),
         # node-count gate: a sparse many-node graph must route to the
         # join branch even when the EDGE count is under _HC_GATE —
         # patching the node gate to 0 simulates exactly that routing
-        ("q_harmonic_centrality", joins_sets, "_HC_NODE_GATE"),
+        ("q_harmonic_centrality", joins_sets, "_HC_NODE_GATE", "harmonic"),
         # seed-count gate: the per-hop matmul allocates (seeds x
         # nodes) transients, so a huge seed panel must also route to
         # the join branch even when edges AND nodes pass their gates
-        ("q_harmonic_centrality", joins_sets, "_HC_SEED_GATE"),
-        ("q_greedy_cover_selection", llm_curation, "_COVER_GATE"),
+        ("q_harmonic_centrality", joins_sets, "_HC_SEED_GATE", "harmonic"),
+        ("q_greedy_cover_selection", llm_curation, "_COVER_GATE", "set_cover"),
         # r10: single-task BIGINT-Lloyd finisher vs the distributed
         # linear-lineage loop — integer-exact, so equality is exact
-        ("q_kmeans_quantized_exact", llm_vectors, "_KMQ_FINISH_ROWS"),
+        ("q_kmeans_quantized_exact", llm_vectors, "_KMQ_FINISH_ROWS", "kmeans_quantized"),
         # r10: bucketed greedy sweep vs the pointer-doubled join walk
-        ("q_interval_scheduling_users", event_analytics, "_IS_GATE"),
+        ("q_interval_scheduling_users", event_analytics, "_IS_GATE", "interval_scheduling"),
         # r10: numpy doubling replay vs the rerooted self-join loop
-        ("q_functional_graph_rho", joins_sets, "_FG_GATE"),
+        ("q_functional_graph_rho", joins_sets, "_FG_GATE", "functional_rho"),
         # r10: single-task Brandes replay vs the 5-join level pipeline
-        ("q_betweenness_centrality", joins_sets, "_BC_NODE_GATE"),
+        ("q_betweenness_centrality", joins_sets, "_BC_NODE_GATE", "betweenness"),
         # r11: single-task per-series LOF kernel vs the pair-join +
         # window + keyed-joins pipeline (integer-exact lof_q; the
         # emitted lof double is one division of it in both branches)
-        ("q_lof_hourly_anomalies", stats_models, "_LOF_KERNEL_PTS"),
-        ("q_lof_hourly_anomalies", stats_models, "_LOF_KERNEL_SERIES"),
+        ("q_lof_hourly_anomalies", stats_models, "_LOF_KERNEL_PTS", "lof_kernel"),
+        ("q_lof_hourly_anomalies", stats_models, "_LOF_KERNEL_SERIES", "lof_kernel"),
         # r12: single-task vectorized 64-trial scorer (sample via
         # TakeOrdered + tagged union) vs the BNLJ expansion + wide
         # hash aggregate. The emitted inlier_frac double is the same
         # single floor-quantized division in both branches; everything
         # else is integer-exact
-        ("q_ransac_price_line", robust_models, "_RS_KERNEL_PTS"),
+        ("q_ransac_price_line", robust_models, "_RS_KERNEL_PTS", "ransac"),
         # r12: single-task bincount/add.at bounded-hop path counts vs
         # the two persisted join+agg rounds + three-way join (integer
         # path counts; katz double is one exact /512 in both branches)
-        ("q_katz_centrality", joins_sets, "_KZ_GATE"),
+        ("q_katz_centrality", joins_sets, "_KZ_GATE", "katz"),
         # r12: single-task minimum.at relaxation vs the self-loop join
         # loop (integer distances, same min-node source and fixpoint)
-        ("q_bellman_ford_nearest", joins_sets, "_BF_GATE"),
+        ("q_bellman_ford_nearest", joins_sets, "_BF_GATE", "bellman_ford"),
         # r12: single-task lexsort/run-length synchronous LPA vs the
         # per-round join + groupBy + row_number pipeline (integer
         # labels, same (count desc, label asc) argmax)
-        ("q_lpa_communities", joins_sets, "_LPA_GATE"),
+        ("q_lpa_communities", joins_sets, "_LPA_GATE", "lpa"),
         # r12: single-task 21-slope exact-median sweep vs the
         # crossJoin fan + window + join-back (integer medians/losses;
         # abs_loss_total is the same /100.0 in both branches)
-        ("q_quantile_regression_grid", robust_models, "_QR_KERNEL_PTS"),
+        ("q_quantile_regression_grid", robust_models, "_QR_KERNEL_PTS", "quantile_grid"),
         # r12: single-task vocab-sized integer power iteration vs the
         # 5 eager-checkpoint join rounds (pr_q DIV d arithmetic is
         # integer-exact in both branches)
-        ("q_textrank_keywords", advanced_models, "_TR_GATE"),
+        ("q_textrank_keywords", advanced_models, "_TR_GATE", "textrank"),
         # r12: single-task integer HITS replay vs the per-round
         # checkpoint + broadcast-max loop (all arithmetic int64 DIV)
-        ("q_hits_quantized_exact", joins_sets, "_HITS_GATE"),
+        ("q_hits_quantized_exact", joins_sets, "_HITS_GATE", "hits"),
         # r12: single-task integer PageRank replay vs the linear-
         # lineage join loop (same DIV arithmetic and label tie-break)
-        ("q_pagerank_quantized_exact", llm_dedup, "_PRQ_GATE"),
+        ("q_pagerank_quantized_exact", llm_dedup, "_PRQ_GATE", "pagerank_quantized"),
         # r12: single-task PPR replay with explicit reached mask vs
         # the sparse-frontier full-outer loop (reachability semantics
         # are part of the fixpoint; integer DIV arithmetic)
-        ("q_personalized_pagerank", llm_dedup, "_PPR_GATE"),
+        ("q_personalized_pagerank", llm_dedup, "_PPR_GATE", "personalized_pagerank"),
     ]
-    for name, mod, gate in cases:
-        kernel = sorted(
-            tuple(r) for r in REGISTRY[name].fn(spark, SF_DIR_SMALL).collect()
-        )
-        monkeypatch.setattr(mod, gate, 0)
-        try:
-            dist = sorted(
-                tuple(r)
-                for r in REGISTRY[name].fn(spark, SF_DIR_SMALL).collect()
+    try:
+        for name, mod, const, gate in cases:
+            probe.enable()
+            kernel = sorted(
+                tuple(r) for r in REGISTRY[name].fn(spark, SF_DIR_SMALL).collect()
             )
-        finally:
-            monkeypatch.undo()
-        assert kernel == dist and len(kernel) > 0, name
+            assert probe.branches().get(gate) == "kernel", (name, const)
+            monkeypatch.setattr(mod, const, 0)
+            try:
+                dist = sorted(
+                    tuple(r)
+                    for r in REGISTRY[name].fn(spark, SF_DIR_SMALL).collect()
+                )
+                assert probe.branches().get(gate) == "distributed", (name, const)
+            finally:
+                monkeypatch.undo()
+            assert kernel == dist and len(kernel) > 0, name
+    finally:
+        probe.disable()
 
 
 def test_probe_force_distributed_routes_and_records(spark, monkeypatch):
@@ -794,6 +803,48 @@ def test_stable_matching_short_panel_parity(spark, tmp_path):
         )
     finally:
         con.close()
+
+
+def test_mul_i64_raises_at_the_int64_edge():
+    """The kernels' checked multiply is exact up to the last
+    representable product and raises one step past it, on both signs,
+    where numpy's own int64 multiply would wrap."""
+    import pytest
+
+    from fts_analysis_datalake_spark.probe import mul_i64
+
+    top, bottom = 2**63 - 1, -(2**63)
+    got = mul_i64(np.array([top // 2, 0, bottom // 2]), 2)
+    assert got.dtype == np.int64
+    assert got.tolist() == [top - 1, 0, bottom]
+    assert mul_i64(np.array([top // 7]), -7).tolist() == [-(top // 7) * 7]
+    for a, k in ((top // 2 + 1, 2), (bottom // 2 - 1, 2), (bottom // 2, -2)):
+        with pytest.raises(OverflowError):
+            mul_i64(np.array([0, a]), k)
+    assert mul_i64(np.array([], dtype=np.int64), 2**40).tolist() == []
+
+
+def test_single_task_null_and_empty_contract(spark):
+    """probe.single_task raises on a null input naming the kernel and
+    column, returns zero rows WITHOUT calling the kernel on empty
+    input, and passes non-empty null-free input through as one frame."""
+    import pytest
+
+    from fts_analysis_datalake_spark import probe
+
+    def ident(pdf):
+        return pdf
+
+    def must_not_run(pdf):
+        raise AssertionError("kernel called on empty input")
+
+    schema = "u bigint, v bigint"
+    df = spark.createDataFrame([(1, 2), (3, None), (5, 6)], schema)
+    with pytest.raises(Exception, match=r"ident: null in input column\(s\) \['v'\]"):
+        probe.single_task(df, ident, schema).collect()
+    assert probe.single_task(df.filter("u < 0"), must_not_run, schema).collect() == []
+    rows = probe.single_task(df.dropna(), ident, schema).collect()
+    assert sorted(tuple(r) for r in rows) == [(1, 2), (5, 6)]
 
 
 def test_kmq_kernel_overflow_guard_is_loud(spark):

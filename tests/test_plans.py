@@ -158,12 +158,12 @@ def test_no_row_at_a_time_python_udf(spark, plans):
     assert not offenders, offenders
 
 
-def test_python_eval_only_on_declared_udf_surface(spark):
+def test_python_eval_only_on_declared_udf_surface(spark, plans):
     offenders = {}
     for name in ALL_QUERIES:
         if name in PYTHON_SURFACE:
             continue
-        nodes = python_eval_nodes(REGISTRY[name].fn(spark, SF_DIR))
+        nodes = python_eval_nodes(plans[name])
         if nodes:
             offenders[name] = nodes
     assert not offenders, offenders
