@@ -85,10 +85,14 @@ def reroot(df: DataFrame) -> DataFrame:
     return DataFrame(new_jdf, d.sparkSession)
 
 
+_FIXPOINT_PARTITIONS = 4
+
+
 @contextmanager
-def fixpoint_confs(spark, partitions: int = 4, enabled: bool = True):
+def fixpoint_confs(spark, enabled: bool = True):
     """Run an iterative fixpoint loop under local-friendly SQL confs:
-    AQE off, ``partitions`` shuffle partitions, restored on exit.
+    AQE off, ``_FIXPOINT_PARTITIONS`` shuffle partitions, restored on
+    exit.
 
     Rationale (measured on the sf0.1 DBSCAN eps-graph, 322k edges):
     with AQE on, every exchange in every round becomes its own
@@ -109,7 +113,7 @@ def fixpoint_confs(spark, partitions: int = 4, enabled: bool = True):
         return
     keys = {
         "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.shuffle.partitions": str(_FIXPOINT_PARTITIONS),
     }
     saved: dict[str, str | None] = {}
     for k, v in keys.items():

@@ -28,11 +28,17 @@ Scale notes (100 TB / billions of edges):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from fts_analysis_datalake_spark import probe
-from fts_analysis_datalake_spark.caching import fixpoint_confs, reroot
+from fts_analysis_datalake_spark.caching import (
+    fixpoint_confs,
+    reroot,
+    tracked_persist,
+)
+from fts_analysis_datalake_spark.probe import mul_i64
 
 
 def connected_components(
@@ -134,12 +140,14 @@ def dedup_clusters(
     )
 
 
+_DAMPING = 0.85
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iters: int = 10,
-    damping: float = 0.85,
     symmetrize_dedup: bool = True,
     small_finish_rows: int | None = None,
 ) -> DataFrame:
@@ -195,7 +203,7 @@ def pagerank(
         small_finish_rows is not None
         and edges.count() * 2 <= small_finish_rows,
     ):
-        n_iters, d_factor = iters, damping
+        n_iters, d_factor = iters, _DAMPING
 
         def pr(pdf):
             import numpy as np
@@ -246,7 +254,7 @@ def pagerank(
             .agg(F.sum("c").alias("in_rank"))
             .select(
                 "node",
-                (F.lit(1.0 - damping) + F.lit(damping) * F.col("in_rank")).alias(
+                (F.lit(1.0 - _DAMPING) + F.lit(_DAMPING) * F.col("in_rank")).alias(
                     "rank"
                 ),
             )
@@ -272,6 +280,114 @@ def pagerank(
     for _ in range(iters):
         ranks = hop(ranks)
     return ranks
+
+
+# Integer PageRank: ranks are 1e-9 BIGINT rationals, so every round maps
+# integers to integers and replays bit-identically in a SQL oracle.
+PAGERANK_EXACT_ONE = 1_000_000_000  # rank unit
+PAGERANK_EXACT_BASE = 150_000_000  # (1 - damping) teleport mass per seed
+# Kernel gate in directed edges (patchable; tests force the distributed
+# branch). The single-task replay holds O(directed edges) int64 arrays,
+# ~30 MB at the gate.
+_PAGERANK_EXACT_GATE = 2_000_000
+
+
+def pagerank_exact(
+    edges: DataFrame, rounds: int, seed: Column | None = None
+) -> DataFrame:
+    """Integer PageRank over the undirected graph ``edges`` (columns
+    ``u``, ``v``, each edge once) -> ``(node, r_q)`` for every node in
+    the final state.
+
+    Seeds start at ``PAGERANK_EXACT_ONE`` and receive the teleport mass
+    ``PAGERANK_EXACT_BASE`` each round; ``seed`` is a boolean
+    expression over the column ``node`` (``None``: every node is a
+    seed). A round sends ``r_q DIV deg`` along every edge out of each
+    state node, and a node's new rank is its teleport mass plus
+    ``(85 * sum) DIV 100``. The state after a round is the nodes that
+    received a contribution plus the seeds, so with a seed set the
+    rank frontier stays the reached neighbourhood (personalized
+    PageRank) and without one it is every node. No labelling or top-k:
+    callers order the result themselves."""
+    sym = tracked_persist(
+        edges.select(F.col("u").alias("node"), "v").unionAll(
+            edges.select(F.col("v").alias("node"), F.col("u").alias("v"))
+        )
+    )
+    one, base_ = PAGERANK_EXACT_ONE, PAGERANK_EXACT_BASE
+
+    # Under the gate all rounds replay in one task. The state set is
+    # carried as an explicit reached mask: a reached node passes on
+    # its rank even at 0, exactly as a 0-valued row does in the join.
+    # No int64 guard is needed beyond mul_i64: a round never grows the
+    # total rank mass past nodes * 1e9 <= 2e15 under the gate, and no
+    # contribution sum exceeds that total.
+    if probe.gate(
+        "pagerank_quantized", 0 < sym.count() <= _PAGERANK_EXACT_GATE
+    ):
+
+        def pagerank_exact_kernel(pdf):
+            import numpy as np
+            import pandas as pd
+
+            nodes, ui = np.unique(pdf["node"].to_numpy(), return_inverse=True)
+            vi = np.searchsorted(nodes, pdf["v"].to_numpy())  # symmetric
+            n = len(nodes)
+            deg = np.bincount(ui, minlength=n).astype(np.int64)
+            seeds = np.ones(n, dtype=bool)
+            if "seed" in pdf:
+                seeds[ui] = pdf["seed"].to_numpy(dtype=bool)
+            base = np.where(seeds, np.int64(base_), np.int64(0))
+            r = np.where(seeds, np.int64(one), np.int64(0))
+            reached = seeds
+            for _ in range(rounds):
+                am = reached[ui]
+                contrib = np.zeros(n, dtype=np.int64)
+                np.add.at(contrib, vi[am], r[ui[am]] // deg[ui[am]])
+                reached = seeds.copy()
+                reached[vi[am]] = True
+                r = np.where(reached, base + mul_i64(contrib, 85) // 100, 0)
+            return pd.DataFrame({"node": nodes[reached], "r_q": r[reached]})
+
+        feed = sym if seed is None else sym.withColumn("seed", seed)
+        schema = StructType(
+            [
+                StructField("node", sym.schema["node"].dataType),
+                StructField("r_q", LongType()),
+            ]
+        )
+        return probe.single_task(feed, pagerank_exact_kernel, schema)
+
+    # The distributed form: the edge+degree table is checkpointed once;
+    # each round joins the rank state onto it and full-outer-joins the
+    # contribution aggregate with the checkpointed seed table. No
+    # per-round checkpoint: the state is referenced once per round, so
+    # the lineage stays linear and all rounds compile into one job.
+    edges_ = sym.localCheckpoint()
+    deg = edges_.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+    edges_deg = edges_.join(deg, "node").localCheckpoint()
+    seeds = deg.select("node")
+    if seed is not None:
+        seeds = seeds.filter(seed)
+    seeds = seeds.localCheckpoint(eager=True)
+    r = seeds.withColumn("r_q", F.lit(one).cast("bigint"))
+    base = seeds.withColumn("base", F.lit(base_).cast("bigint"))
+    for _ in range(rounds):
+        contrib = (
+            edges_deg.join(
+                r.withColumnsRenamed({"node": "ru", "r_q": "prev_q"}),
+                F.col("ru") == F.col("node"),
+            )
+            .groupBy(F.col("v").alias("cnode"))
+            .agg(F.expr("85 * sum(prev_q div deg) div 100").alias("contrib"))
+        )
+        r = contrib.join(base, F.col("cnode") == F.col("node"), "full_outer").select(
+            F.coalesce("cnode", "node").alias("node"),
+            (F.coalesce("base", F.lit(0)) + F.coalesce("contrib", F.lit(0)))
+            .cast("bigint")
+            .alias("r_q"),
+        )
+    return r
 
 
 def bfs_hops(

@@ -28,7 +28,7 @@ from fts_analysis_datalake_spark.catalog import (
     ensure_shuffle_parallelism,
     load_table,
 )
-from fts_analysis_datalake_spark.probe import mul_i64
+from fts_analysis_datalake_spark.operators.graphs import pagerank_exact
 from fts_analysis_datalake_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -900,12 +900,6 @@ def q_grid_spatial_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-# Kernel gate (patchable; tests force the distributed branch): the
-# single-task power iteration holds O(vocab-edge) arrays (~50 MB at
-# the gate).
-_TR_GATE = 2_000_000
-
-
 def _textrank_oracle() -> str:
     from fts_analysis_datalake_spark.operators.text import sql_tokens
 
@@ -962,11 +956,11 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs, each neighbor contribution is pr_q DIV deg, and the
     0.85 damping is the exact rational 17/20 — every round maps
     integers to integers identically on both engines, so no float is
-    ever accumulated. Spark localCheckpoints each round (the rank
-    frame feeds the join and the fallback LEFT side; verify-notes
-    2^k rule) and the DuckDB twin MATERIALIZEs its round CTEs. The
-    vocabulary graph is corpus-size-free (vocab nodes, not doc
-    rows) — at 100 TB only the one adjacency aggregate scans data."""
+    ever accumulated. The rounds run in the shared integer PageRank
+    operator (17/20 damping == its 85/100) and the DuckDB twin
+    MATERIALIZEs its round CTEs. The vocabulary graph is
+    corpus-size-free (vocab nodes, not doc rows) — at 100 TB only
+    the one adjacency aggregate scans data."""
     from fts_analysis_datalake_spark.operators.text import normalize_text, tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -981,86 +975,19 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.least("pr.x", "pr.y").alias("w1"), F.greatest("pr.x", "pr.y").alias("w2")
     ).filter(F.col("w1") != F.col("w2"))
-    edges = tracked_persist(
+    edges = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= 3)
-        .select("w1", "w2")
+        .select(F.col("w1").alias("u"), F.col("w2").alias("v"))
     )
-    # r12 (guide §4.2): the co-occurrence graph is VOCAB-sized, so
-    # under the edge gate all 5 damped power-iteration rounds run in
-    # ONE bounded task — same integer arithmetic (pr_q DIV d neighbor
-    # contributions, 150000000 + (17*contrib) DIV 20 damping — Python
-    # // == DIV on non-negatives), same (pr_q desc, keyword asc)
-    # top-15 (ASCII U-compare == Spark binary string order) — instead
-    # of 5 eager-checkpoint jobs plus two edge/degree checkpoints.
-    # Forced branch-equivalence tested. A/B x0.32.
-    if probe.gate("textrank", 0 < edges.count() <= _TR_GATE):
-
-        def tr_kernel(pdf):
-            import numpy as np
-            import pandas as pd
-
-            w1 = np.asarray(pdf["w1"].tolist())
-            w2 = np.asarray(pdf["w2"].tolist())
-            src_ = np.concatenate([w1, w2])
-            dst_ = np.concatenate([w2, w1])
-            nodes, si = np.unique(src_, return_inverse=True)
-            di = np.searchsorted(nodes, dst_)  # symmetric: same node set
-            n = len(nodes)
-            deg = np.bincount(si, minlength=n).astype(np.int64)
-            pr = np.full(n, 1_000_000_000, dtype=np.int64)
-            for _ in range(5):
-                contrib = np.zeros(n, dtype=np.int64)
-                np.add.at(contrib, di, pr[si] // deg[si])
-                pr = 150_000_000 + mul_i64(contrib, 17) // 20
-            top = np.lexsort((nodes, -pr))[:15]
-            return pd.DataFrame(
-                {"keyword": nodes[top], "textrank": pr[top] / 1e9}
-            )
-
-        return probe.single_task(edges, tr_kernel, "keyword string, textrank double")
-    direct = edges.select(
-        F.col("w1").alias("src"), F.col("w2").alias("dst")
-    ).unionAll(edges.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
-    deg = direct.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    direct = direct.localCheckpoint(eager=True)
-    deg = deg.localCheckpoint(eager=True)
-    pr = deg.select("node", F.lit(1000000000).cast("bigint").alias("pr_q"))
-    for _ in range(5):
-        contrib = (
-            direct.join(pr.withColumnRenamed("node", "src"), "src")
-            .join(
-                deg.select(F.col("node").alias("src"), "d"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("pr_q DIV d")).alias("contrib"))
-        )
-        pr = (
-            deg.select("node")
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(150000000)
-                    + F.expr("(17 * COALESCE(contrib, 0)) DIV 20")
-                )
-                .cast("bigint")
-                .alias("pr_q"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    rn = F.row_number().over(Window.orderBy(F.col("pr_q").desc(), "node"))
     return (
-        pr.withColumn("rn", rn)
-        .filter(F.col("rn") <= 15)
+        pagerank_exact(edges, 5)
+        .orderBy(F.desc("r_q"), "node")
+        .limit(15)
         .select(
-            F.col("node").alias("keyword"),
-            (F.col("pr_q") / 1000000000.0).alias("textrank"),
+            F.col("node").alias("keyword"), (F.col("r_q") / 1e9).alias("textrank")
         )
-        .orderBy(F.col("textrank").desc(), "keyword")
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fts_analysis_datalake_spark import probe
-from fts_analysis_datalake_spark.caching import fixpoint_confs, tracked_persist
+from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import ensure_parallelism, load_table
 from fts_analysis_datalake_spark.operators.text import (
     ngrams,
@@ -1711,25 +1711,24 @@ def q_greedy_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — build the distinct table this branch always used.
         dt = dt.distinct()
         allp = None
-        with fixpoint_confs(spark, enabled=False):
-            for i in range(1, _COVER_ROUNDS + 1):
-                if allp is None:
-                    uncov = dt
-                else:
-                    covered = dt.join(
-                        F.broadcast(allp.select("doc_id")), "doc_id", "leftsemi"
-                    ).select("t")
-                    uncov = dt.join(F.broadcast(covered), "t", "left_anti")
-                pick = (
-                    uncov.groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
-                    .orderBy(F.desc("gain"), "doc_id")
-                    .limit(1)
-                    .select(F.lit(i).cast("int").alias("rnd"), "doc_id", "gain")
-                )
-                allp = (
-                    pick if allp is None else allp.unionAll(pick)
-                ).localCheckpoint(eager=True)
+        for i in range(1, _COVER_ROUNDS + 1):
+            if allp is None:
+                uncov = dt
+            else:
+                covered = dt.join(
+                    F.broadcast(allp.select("doc_id")), "doc_id", "leftsemi"
+                ).select("t")
+                uncov = dt.join(F.broadcast(covered), "t", "left_anti")
+            pick = (
+                uncov.groupBy("doc_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
+                .orderBy(F.desc("gain"), "doc_id")
+                .limit(1)
+                .select(F.lit(i).cast("int").alias("rnd"), "doc_id", "gain")
+            )
+            allp = (
+                pick if allp is None else allp.unionAll(pick)
+            ).localCheckpoint(eager=True)
     cum_w = Window.orderBy("rnd")
     return (
         allp.crossJoin(F.broadcast(universe))

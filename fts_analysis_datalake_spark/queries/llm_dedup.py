@@ -13,10 +13,9 @@ oracle-checked on blocked candidate pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import ensure_parallelism, load_table
 from fts_analysis_datalake_spark.operators.dedup import (
@@ -26,6 +25,12 @@ from fts_analysis_datalake_spark.operators.dedup import (
     simhash_candidate_pairs,
     simhash_table,
 )
+from fts_analysis_datalake_spark.operators.graphs import (
+    PAGERANK_EXACT_BASE,
+    PAGERANK_EXACT_ONE,
+    pagerank,
+    pagerank_exact,
+)
 from fts_analysis_datalake_spark.operators.text import (
     ngrams,
     sql_ngrams,
@@ -33,7 +38,6 @@ from fts_analysis_datalake_spark.operators.text import (
     sql_tokens,
     tokens,
 )
-from fts_analysis_datalake_spark.probe import mul_i64
 from fts_analysis_datalake_spark.queries.sketches_search import _h52, _sql_h52
 from fts_analysis_datalake_spark.registry import query
 
@@ -211,6 +215,31 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _ps_label(node: str) -> Column:
+    """Display label of a part/supplier node id: part k is node 2k and
+    reads 'p{k}', supplier k is node 2k+1 and reads 's{k}'."""
+    return F.expr(
+        f"CASE WHEN {node} % 2 = 0 THEN concat('p', {node} div 2)"
+        f" ELSE concat('s', ({node} - 1) div 2) END"
+    )
+
+
+def _parts_suppliers_third(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected part/supplier graph over a third of the parts,
+    each edge once as (u = part node, v = supplier node). The integer
+    PageRank rows prove bit-exact replay, which does not depend on
+    graph size; the float operator covers the full graph."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        li.filter(F.col("l_partkey") % 3 == 0)
+        .select(
+            (F.col("l_partkey") * 2).alias("u"),
+            (F.col("l_suppkey") * 2 + 1).alias("v"),
+        )
+        .distinct()
+    )
+
+
 @query(
     "q_pagerank_parts_suppliers",
     oracle=None,  # iterative; rank-mass conservation tested (test_graphs)
@@ -230,8 +259,6 @@ def q_pagerank_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     every per-round shuffle then hashes/compares 8-byte integers
     instead of strings — measured ~25% off the whole loop, and at
     real scale the narrower key also halves shuffle bytes."""
-    from fts_analysis_datalake_spark.operators.graphs import pagerank
-
     li = load_table(spark, sf_dir, "lineitem")
     edges = li.select(
         (F.col("l_partkey") * 2).alias("src"),
@@ -244,11 +271,8 @@ def q_pagerank_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank(
         edges, iters=10, symmetrize_dedup=False, small_finish_rows=4_000_000
     )
-    label = F.when(
-        F.col("node") % 2 == 0, F.concat(F.lit("p"), (F.col("node") / 2).cast("long"))
-    ).otherwise(F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long")))
     return (
-        ranks.select(label.alias("node"), "rank")
+        ranks.select(_ps_label("node").alias("node"), "rank")
         .orderBy(F.desc("rank"), "node")
         .limit(20)
     )
@@ -1275,13 +1299,7 @@ def q_simhash_md5_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PRQ_ROUNDS = 4
-_PRQ_ONE = 1_000_000_000  # rank unit (1e-9 rationals)
-_PRQ_BASE = 150_000_000  # (1 - damping) in rank units
 _PRQ_TOPK = 20
-# Kernel gate (patchable; tests force the distributed branch): the
-# single-task integer replay holds O(directed edges) int64 arrays
-# (~30 MB at the gate; 85 * sum(c) stays far inside int64).
-_PRQ_GATE = 2_000_000
 
 
 def _pagerank_q_oracle() -> str:
@@ -1300,7 +1318,7 @@ def _pagerank_q_oracle() -> str:
         base += f""",
     r{i} AS MATERIALIZED (
       SELECT e.v AS node,
-             CAST({_PRQ_BASE} + (85 * SUM(r.r_q // d.deg)) // 100 AS BIGINT)
+             CAST({PAGERANK_EXACT_BASE} + (85 * SUM(r.r_q // d.deg)) // 100 AS BIGINT)
                AS r_q
       FROM {prev} r
       JOIN deg d ON d.u = r.node
@@ -1330,95 +1348,16 @@ def q_pagerank_quantized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers to integers — so all 4 rounds replay bit-identically in
     the oracle's unrolled MATERIALIZED CTE chain (the E241 markov
     discipline applied to the E47 graph). Fixed 4 rounds on both
-    engines; top-20 with node-id tiebreak. Quantization bias per
+    engines; top-20 with label tiebreak. Quantization bias per
     round is < 1e-9 x degree — ordering-irrelevant, and exactness is
     the point: this row upgrades the iterative-graph family from
     rows-only to value-verified in the driver record."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # A third of the parts: the verification value (bit-exact replay
-    # of _PRQ_ROUNDS=4 integer rounds) is independent of graph size, and the full
-    # graph costs ~3x the bench time for the same proof — the float
-    # operator covers the full graph.
-    e0 = (
-        li.filter(F.col("l_partkey") % 3 == 0)
-        .select(
-            (F.col("l_partkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    sym = tracked_persist(
-        e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    # r12 (guide §4.2, the HITS/textrank house pattern): under the edge
-    # gate all _PRQ_ROUNDS integer rounds (r_q DIV deg contributions,
-    # base + 85*sum DIV 100 damping — Python // == div on non-negatives)
-    # replay in ONE bounded task; the symmetric graph keeps every node
-    # in-state each round exactly as the groupBy(v) loop does, and the
-    # top-20 tie-break on the LABEL STRING is replicated with an ASCII
-    # U-dtype lexsort. Forced branch-equivalence tested. A/B x0.57.
-    if probe.gate("pagerank_quantized", 0 < sym.count() <= _PRQ_GATE):
-        one, base_, rounds, topk = _PRQ_ONE, _PRQ_BASE, _PRQ_ROUNDS, _PRQ_TOPK
-
-        def prq_kernel(pdf):
-            import numpy as np
-            import pandas as pd
-
-            u = pdf["u"].to_numpy(dtype=np.int64)
-            v = pdf["v"].to_numpy(dtype=np.int64)
-            nodes, ui = np.unique(u, return_inverse=True)
-            vi = np.searchsorted(nodes, v)  # symmetric: same node set
-            deg = np.bincount(ui, minlength=len(nodes)).astype(np.int64)
-            r = np.full(len(nodes), one, dtype=np.int64)
-            for _ in range(rounds):
-                s = np.zeros(len(nodes), dtype=np.int64)
-                np.add.at(s, vi, r[ui] // deg[ui])
-                r = base_ + mul_i64(s, 85) // 100
-            labels = np.asarray(
-                [
-                    f"p{x // 2}" if x % 2 == 0 else f"s{(x - 1) // 2}"
-                    for x in nodes
-                ]
-            )
-            top = np.lexsort((labels, -r))[:topk]
-            return pd.DataFrame({"node": labels[top], "rank": r[top] / 1e9})
-
-        return probe.single_task(sym, prq_kernel, "node string, rank double")
-    edges = sym.localCheckpoint()
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    edges_deg = edges.join(deg, "u").localCheckpoint()
-    r = deg.select("u", F.lit(_PRQ_ONE).cast("bigint").alias("r_q"))
-    for _ in range(_PRQ_ROUNDS):
-        r = (
-            edges_deg.join(
-                r.withColumnsRenamed({"u": "ru", "r_q": "prev_q"}),
-                F.col("ru") == F.col("u"),
-            )
-            .select(F.col("v"), F.expr("prev_q div deg").alias("c"))
-            .groupBy("v")
-            .agg(
-                (
-                    F.lit(_PRQ_BASE)
-                    + F.expr("85 * sum(c) div 100")
-                )
-                .cast("bigint")
-                .alias("r_q")
-            )
-            .withColumnRenamed("v", "u")
-            # r11: no per-round checkpoint — the rank state is
-            # referenced exactly once per round, so the lineage stays
-            # linear and all rounds compile into one job (the same
-            # measured x0.80 as q_personalized_pagerank).
-        )
-    label = F.when(
-        F.col("u") % 2 == 0, F.concat(F.lit("p"), F.expr("u div 2"))
-    ).otherwise(F.concat(F.lit("s"), F.expr("(u - 1) div 2")))
+    ranks = pagerank_exact(_parts_suppliers_third(spark, sf_dir), _PRQ_ROUNDS)
     return (
-        r.select(label.alias("node"), (F.col("r_q") / 1000000000.0).alias("rank"),
-                 F.col("r_q"))
+        ranks.select(_ps_label("node").alias("node"), "r_q")
         .orderBy(F.desc("r_q"), "node")
         .limit(_PRQ_TOPK)
-        .select("node", "rank")
+        .select("node", (F.col("r_q") / 1e9).alias("rank"))
     )
 
 
@@ -1936,13 +1875,9 @@ def q_edit_distance_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PPR_ROUNDS = 4
-_PPR_ONE = 1_000_000_000
-_PPR_BASE = 150_000_000  # (1 - damping) teleport mass per seed, rank units
 _PPR_TOPK = 20
-# Kernel gate (patchable; tests force the distributed branch): the
-# single-task replay holds O(directed edges) int64 arrays plus a
-# reached mask (~30 MB at the gate).
-_PPR_GATE = 2_000_000
+# Every 7th supplier (odd node ids) is a seed.
+_PPR_SEED = "node % 2 = 1 AND ((node - 1) div 2) % 7 = 0"
 
 
 def _ppr_oracle() -> str:
@@ -1957,7 +1892,7 @@ def _ppr_oracle() -> str:
     seeds AS MATERIALIZED (
       SELECT DISTINCT v AS node FROM e0 WHERE ((v - 1) // 2) % 7 = 0),
     r0 AS MATERIALIZED (
-      SELECT node, CAST({_PPR_ONE} AS BIGINT) AS r_q FROM seeds)"""
+      SELECT node, CAST({PAGERANK_EXACT_ONE} AS BIGINT) AS r_q FROM seeds)"""
     prev = "r0"
     for i in range(1, _PPR_ROUNDS + 1):
         base += f""",
@@ -1973,7 +1908,7 @@ def _ppr_oracle() -> str:
              CAST(COALESCE(s.base, 0) + COALESCE(c.contrib, 0) AS BIGINT)
                AS r_q
       FROM c{i} c
-      FULL JOIN (SELECT node, CAST({_PPR_BASE} AS BIGINT) AS base
+      FULL JOIN (SELECT node, CAST({PAGERANK_EXACT_BASE} AS BIGINT) AS base
                  FROM seeds) s ON s.node = c.node)"""
         prev = f"r{i}"
     return base + f""",
@@ -2008,124 +1943,15 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the whole point of PPR at 100 TB: state is proportional to
     the reached neighborhood, never the graph). All 4 rounds replay
     bit-identically in the unrolled MATERIALIZED-CTE oracle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    e0 = (
-        li.filter(F.col("l_partkey") % 3 == 0)
-        .select(
-            (F.col("l_partkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
+    ranks = pagerank_exact(
+        _parts_suppliers_third(spark, sf_dir), _PPR_ROUNDS, seed=F.expr(_PPR_SEED)
     )
-    sym = tracked_persist(
-        e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    # r12 (guide §4.2): under the edge gate all _PPR_ROUNDS restart
-    # rounds replay in ONE bounded task. The sparse-frontier fixpoint
-    # is reproduced EXACTLY with an explicit reached mask: each round
-    # the state keys are {v with an active in-edge} UNION seeds (the
-    # full-outer join's key set), contributions draw from reached
-    # nodes regardless of value (0-valued reached rows still propagate
-    # reachability, as rows do in the join), and the top-20 tie-break
-    # is (r_q desc, numeric id asc) as in the distributed orderBy.
-    # Forced branch-equivalence tested. A/B x0.57.
-    if probe.gate("personalized_pagerank", 0 < sym.count() <= _PPR_GATE):
-        one, base_, rounds, topk = _PPR_ONE, _PPR_BASE, _PPR_ROUNDS, _PPR_TOPK
-
-        def ppr_kernel(pdf):
-            import numpy as np
-            import pandas as pd
-
-            u = pdf["u"].to_numpy(dtype=np.int64)
-            v = pdf["v"].to_numpy(dtype=np.int64)
-            nodes, ui = np.unique(u, return_inverse=True)
-            vi = np.searchsorted(nodes, v)  # symmetric: same node set
-            n = len(nodes)
-            deg = np.bincount(ui, minlength=n).astype(np.int64)
-            seed_mask = (nodes % 2 == 1) & (((nodes - 1) // 2) % 7 == 0)
-            base_arr = np.where(seed_mask, np.int64(base_), np.int64(0))
-            r = np.where(seed_mask, np.int64(one), np.int64(0))
-            reached = seed_mask.copy()
-            for _ in range(rounds):
-                am = reached[ui]
-                contrib = np.zeros(n, dtype=np.int64)
-                np.add.at(contrib, vi[am], r[ui[am]] // deg[ui[am]])
-                got = np.zeros(n, dtype=bool)
-                got[vi[am]] = True
-                new_reached = got | seed_mask
-                r = np.where(new_reached, base_arr + mul_i64(contrib, 85) // 100, 0)
-                reached = new_reached
-            idx = np.flatnonzero(reached)
-            rr, nid = r[idx], nodes[idx]
-            top = np.lexsort((nid, -rr))[:topk]
-            sel_n, sel_r, sel_s = nid[top], rr[top], seed_mask[idx][top]
-            labels = [
-                f"p{x // 2}" if x % 2 == 0 else f"s{(x - 1) // 2}"
-                for x in sel_n
-            ]
-            return pd.DataFrame(
-                {"node": labels, "is_seed": sel_s, "rank": sel_r / 1e9}
-            )
-
-        return probe.single_task(
-            sym, ppr_kernel, "node string, is_seed boolean, rank double"
-        )
-    edges = sym.localCheckpoint()
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    edges_deg = edges.join(deg, "u").localCheckpoint()
-    seeds = (
-        e0.filter(F.expr("(v - 1) div 2") % 7 == 0)
-        .select(F.col("v").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    r = seeds.select("node", F.lit(_PPR_ONE).cast("bigint").alias("r_q"))
-    base = seeds.select("node", F.lit(_PPR_BASE).cast("bigint").alias("base"))
-    for _ in range(_PPR_ROUNDS):
-        contrib = (
-            edges_deg.join(
-                r.withColumnsRenamed({"node": "ru", "r_q": "prev_q"}),
-                F.col("ru") == F.col("u"),
-            )
-            .select(F.col("v"), F.expr("prev_q div deg").alias("c"))
-            .groupBy("v")
-            .agg(F.expr("85 * sum(c) div 100").cast("bigint").alias("contrib"))
-            .withColumnRenamed("v", "cnode")
-        )
-        # r11 (guide §2.4; r6 house lesson): NO per-round checkpoint —
-        # the rank state is referenced exactly ONCE per round (the
-        # contrib join; the teleport side joins the checkpointed seed
-        # table), so the lineage stays linear and all 4 rounds compile
-        # into one job instead of 4 eager actions. Interleaved A/B:
-        # 3.34 -> 2.67 s best (x0.80), every rep faster.
-        r = contrib.join(
-            base, F.col("cnode") == F.col("node"), "full_outer"
-        ).select(
-            F.coalesce(F.col("cnode"), F.col("node")).alias("node"),
-            (
-                F.coalesce(F.col("base"), F.lit(0))
-                + F.coalesce(F.col("contrib"), F.lit(0))
-            )
-            .cast("bigint")
-            .alias("r_q"),
-        )
-    label = F.when(
-        F.col("node") % 2 == 0, F.concat(F.lit("p"), F.expr("node div 2"))
-    ).otherwise(F.concat(F.lit("s"), F.expr("(node - 1) div 2")))
     return (
-        r.join(
-            seeds.withColumnRenamed("node", "snode"),
-            F.col("node") == F.col("snode"),
-            "left",
-        )
-        .select(
-            label.alias("node_label"),
-            F.col("snode").isNotNull().alias("is_seed"),
-            (F.col("r_q") / 1000000000.0).alias("rank"),
-            F.col("r_q"),
-            F.col("node"),
-        )
-        .orderBy(F.desc("r_q"), "node")
+        ranks.orderBy(F.desc("r_q"), "node")
         .limit(_PPR_TOPK)
-        .select(F.col("node_label").alias("node"), "is_seed", "rank")
+        .select(
+            _ps_label("node").alias("node"),
+            F.expr(_PPR_SEED).alias("is_seed"),
+            (F.col("r_q") / 1e9).alias("rank"),
+        )
     )

@@ -606,12 +606,12 @@ def test_count_gated_branches_agree(spark, monkeypatch):
     record must show each constant really routes: its gate takes the
     kernel before the patch and the distributed branch after."""
     from fts_analysis_datalake_spark import probe
+    from fts_analysis_datalake_spark.operators import graphs
     from fts_analysis_datalake_spark.queries import (
         advanced_models,
         event_analytics,
         joins_sets,
         llm_curation,
-        llm_dedup,
         llm_text,
         llm_vectors,
         robust_models,
@@ -669,20 +669,19 @@ def test_count_gated_branches_agree(spark, monkeypatch):
         # crossJoin fan + window + join-back (integer medians/losses;
         # abs_loss_total is the same /100.0 in both branches)
         ("q_quantile_regression_grid", robust_models, "_QR_KERNEL_PTS", "quantile_grid"),
-        # r12: single-task vocab-sized integer power iteration vs the
-        # 5 eager-checkpoint join rounds (pr_q DIV d arithmetic is
-        # integer-exact in both branches)
-        ("q_textrank_keywords", advanced_models, "_TR_GATE", "textrank"),
+        # graphs.pagerank_exact, one case per caller: the single-task
+        # integer replay with explicit reached mask vs the linear-
+        # lineage full-outer join loop (integer DIV arithmetic; the
+        # label / is_seed / top-k run in Spark after either branch).
+        # TextRank: string nodes, every node a seed, 5 rounds
+        ("q_textrank_keywords", graphs, "_PAGERANK_EXACT_GATE", "pagerank_quantized"),
         # r12: single-task integer HITS replay vs the per-round
         # checkpoint + broadcast-max loop (all arithmetic int64 DIV)
         ("q_hits_quantized_exact", joins_sets, "_HITS_GATE", "hits"),
-        # r12: single-task integer PageRank replay vs the linear-
-        # lineage join loop (same DIV arithmetic and label tie-break)
-        ("q_pagerank_quantized_exact", llm_dedup, "_PRQ_GATE", "pagerank_quantized"),
-        # r12: single-task PPR replay with explicit reached mask vs
-        # the sparse-frontier full-outer loop (reachability semantics
-        # are part of the fixpoint; integer DIV arithmetic)
-        ("q_personalized_pagerank", llm_dedup, "_PPR_GATE", "personalized_pagerank"),
+        # integer PageRank: long nodes, every node a seed
+        ("q_pagerank_quantized_exact", graphs, "_PAGERANK_EXACT_GATE", "pagerank_quantized"),
+        # personalized PageRank: a seed set, so a sparse frontier
+        ("q_personalized_pagerank", graphs, "_PAGERANK_EXACT_GATE", "pagerank_quantized"),
     ]
     try:
         for name, mod, const, gate in cases:

@@ -110,18 +110,18 @@ PYTHON_SURFACE = {
     "q_katz_centrality",  # E354 edge-gated single-task bincount/add.at
     # path counts over the backbone (r12); the join+agg rounds are the
     # else-branch
-    "q_personalized_pagerank",  # E290 edge-gated single-task PPR
-    # replay with explicit reached mask (r12); the full-outer
+    "q_personalized_pagerank",  # E290 graphs.pagerank_exact with a
+    # seed set: edge-gated single-task integer replay; the full-outer
     # frontier loop is the else-branch
-    "q_pagerank_quantized_exact",  # E289 edge-gated single-task integer
-    # PageRank replay (r12); the linear-lineage join loop is the
-    # else-branch
+    "q_pagerank_quantized_exact",  # E289 graphs.pagerank_exact, every
+    # node a seed: edge-gated single-task integer replay; the full-outer
+    # join loop is the else-branch
     "q_hits_quantized_exact",  # E298 edge-gated single-task integer
     # HITS replay (r12); the checkpointed half-round loop is the
     # else-branch
-    "q_textrank_keywords",  # E224 edge-gated single-task vocab
-    # power iteration (r12); the checkpointed join rounds are the
-    # else-branch
+    "q_textrank_keywords",  # E224 graphs.pagerank_exact over the
+    # vocab graph: edge-gated single-task integer replay; the full-outer
+    # join loop is the else-branch
     "q_quantile_regression_grid",  # E233 count-gated single-task
     # 21-slope exact-median sweep (r12); the crossJoin fan + window is
     # the else-branch
