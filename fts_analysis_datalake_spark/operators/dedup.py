@@ -184,8 +184,8 @@ def exact_jaccard_for_pairs(
         rows = shingle_table(df, id_col, text_col, shingle_n).withColumnRenamed("shingle", "elem")
     # The element-set table feeds BOTH sides of the pair join; persist
     # so the tokenize/shingle + collect_set lineage runs once (same
-    # lifecycle contract as minhash_signatures — released by the
-    # bench/driver clearCache between queries).
+    # lifecycle contract as minhash_signatures — released by
+    # caching.release_tracked after the query).
     tok = tracked_persist(rows.groupBy(id_col).agg(F.collect_set("elem").alias("toks")))
     return (
         pairs.join(tok.withColumnsRenamed({id_col: "id_a", "toks": "toks_a"}), "id_a")
@@ -221,9 +221,9 @@ def near_dup_pairs(
 
     Lifecycle note: the persist cannot be released inside this
     function (the returned plan is lazy and still references the
-    cached blocks). Long-lived sessions invoking this repeatedly
-    should call ``spark.catalog.clearCache()`` between queries —
-    bench.py does exactly that after every query.
+    cached blocks). The persist is tracked: long-lived sessions
+    invoking this repeatedly call ``caching.release_tracked()``
+    between queries, as bench.py does after every query.
 
     r11 (guide §5 cache-on-reuse): the SHINGLE table is persisted
     and shared between the signature aggregate and the exact-verify
@@ -432,7 +432,7 @@ def prefix_filter_candidates(
 
     # The deduped shingle table is read FOUR times below (freq, sizes,
     # ranked, both posting sides); persist so the normalize->tokenize->
-    # ngram->explode lineage executes once (clearCache lifecycle).
+    # ngram->explode lineage executes once (release_tracked lifecycle).
     # ``shingles``: a caller that ALSO needs the shingle rows (the
     # exact-verify stage) builds and persists the deduped (id,
     # shingle) table once and shares it here.

@@ -1,29 +1,32 @@
-"""Graph operators for dedup clustering (SURVEY.md §2.12 E15):
-connected components over a pair/edge table.
+"""Graph operators (SURVEY.md §2.12): connected components for dedup
+clustering (E15), float and integer PageRank, and bounded-hop BFS over
+an edge table.
 
 A near-dup pipeline ends with CLUSTERS, not pairs: LSH emits candidate
 pairs, exact verify confirms them, and transitive closure groups them
 so one canonical survivor per component can be kept. This module
 closes that last step.
 
+Every operator is count-gated: under a module-constant gate
+(``_CC_GATE``, ``_PAGERANK_GATE``, ``_PAGERANK_EXACT_GATE``,
+``_BFS_GATE``; tests patch them to 0 or set ``probe.FORCE_DISTRIBUTED``)
+one bounded task replays the whole loop, and above it the distributed
+form below is the 100 TB path.
+
 Scale notes (100 TB / billions of edges):
 
-- Min-label propagation: each iteration is one edge-label hash join
-  plus one groupBy(min) — two shuffles on the node key, no driver-side
-  graph state, nothing ever collected.
-- Iteration count is O(max component *diameter*): right for dedup
-  graphs (LSH buckets emit near-cliques, diameter ~2-4), wrong for
-  geometric graphs (grid-DBSCAN eps-neighborhoods, E235, diameter
-  ~250 at sf0.1) — those use ``connected_components_star`` below,
-  whose star contraction converges in O(log^2 n) rounds.
-- Lineage is truncated every iteration with ``localCheckpoint`` —
-  without it the plan doubles per iteration and the driver OOMs on
-  plan size long before data is a problem.
-- The convergence test is a ``count`` action per iteration; that is
+- Connected components contract stars (large-star / small-star,
+  Kiveris et al.): O(log^2 n) rounds whatever the graph's diameter,
+  each a constant number of node-key shuffles, no driver-side graph
+  state, nothing ever collected.
+- Lineage is truncated every round (``reroot`` / ``localCheckpoint``)
+  — without it the plan doubles per round and the driver OOMs on plan
+  size long before data is a problem.
+- The convergence test is an action every other round; that is
   intrinsic to fixpoint algorithms (Spark has no whole-plan loop
   operator). The fixpoint itself is unique — every node's label is
   the min node id reachable from it — so results are deterministic
-  regardless of how many iterations convergence took.
+  regardless of how many rounds convergence took.
 """
 
 from __future__ import annotations
@@ -41,93 +44,16 @@ from fts_analysis_datalake_spark.caching import (
 from fts_analysis_datalake_spark.probe import mul_i64
 
 
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
-) -> DataFrame:
-    """Label every node of the undirected graph ``edges`` with its
-    component id = the minimum node id in its component.
-
-    Returns (node, comp). Only nodes incident to at least one edge
-    appear (callers union isolated nodes back if they need them —
-    for dedup clustering, un-paired docs are their own survivors and
-    never need a cluster row).
-
-    Raises ``RuntimeError`` if ``max_iter`` iterations don't reach
-    the fixpoint, rather than silently returning partial components.
-    """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # Checkpointed so round 1's hop joins two INDEPENDENT lineages —
-    # a sym-derived labels frame self-joined against sym shares
-    # attribute ids, and Spark's self-join dedup can degrade that
-    # first join badly on large inputs.
-    labels = reroot(
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-
-    def hop(lbl):
-        # Min neighbour label per node: one hash join + one partial agg.
-        nbr_min = (
-            sym.join(lbl.withColumnRenamed("node", "b"), "b")
-            .groupBy("a")
-            .agg(F.min("comp").alias("nbr_comp"))
-            .withColumnRenamed("a", "node")
-        )
-        return lbl.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp"),
-            (F.coalesce("nbr_comp", "comp") < F.col("comp")).alias("_changed"),
-        )
-
-    for _ in range(max_iter):
-        # TWO propagation hops per materialization+convergence check:
-        # halves the per-round job/action overhead, and testing only
-        # the SECOND hop stays sound — any hop with zero changes is
-        # already the fixpoint. Dedup/near-dup graphs are near-cliques
-        # (diameter ~2-4), so this converges in a handful of rounds;
-        # HIGH-diameter graphs should use connected_components_star
-        # instead — min-label propagation is O(diameter) regardless
-        # of per-round tricks. AQE stays ON (see pagerank's note):
-        # the edge x label hop join wants runtime broadcast.
-        new_labels = reroot(hop(hop(labels).drop("_changed")))
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    small_finish_rows: int | None = None,
-) -> DataFrame:
-    """Turn verified duplicate pairs into clusters: (member, cluster_id,
-    cluster_size, is_canonical) where cluster_id is the minimum member
-    id (the deterministic survivor) — the keep/drop decision of a
-    dedup pipeline falls out as ``is_canonical``.
-
-    Default CC is min-label propagation — right for LSH-verified dup
-    graphs (near-cliques, diameter 2-4). ``small_finish_rows`` routes
-    through ``connected_components_star``'s seed-contraction +
-    single-task union-find finisher instead: pass it when the pair
-    graph may be quasi-random or chainy (e.g. low-threshold semantic
-    similarity), where min-label pays a scheduled round per diameter
-    hop (measured 4.2 -> ~0.8 s on a 1.8k-edge cos>=0.3 graph)."""
-    if small_finish_rows is not None:
-        cc = connected_components_star(
-            pairs, id_a, id_b, max_iter, small_finish_rows=small_finish_rows
-        )
-    else:
-        cc = connected_components(pairs, id_a, id_b, max_iter)
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """Turn verified duplicate pairs ``(id_a, id_b)`` into clusters:
+    (member, cluster_id, cluster_size, is_canonical) where cluster_id
+    is the minimum member id (the deterministic survivor) — the
+    keep/drop decision of a dedup pipeline falls out as
+    ``is_canonical``. Components come from :func:`connected_components`,
+    whose seed contraction and union-find finisher also handle
+    quasi-random or chainy pair graphs (e.g. low-threshold semantic
+    similarity) without a scheduled round per diameter hop."""
+    cc = connected_components(pairs, "id_a", "id_b")
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         cc.join(F.broadcast(sizes), "comp")
@@ -141,69 +67,56 @@ def dedup_clusters(
 
 
 _DAMPING = 0.85
+_PAGERANK_ITERS = 10
+# Kernel gate in directed edges (patchable; tests force the distributed
+# branch). The numpy power iteration holds a few float64/int64 arrays
+# per directed edge.
+_PAGERANK_GATE = 4_000_000
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 10,
-    symmetrize_dedup: bool = True,
-    small_finish_rows: int | None = None,
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """PageRank over the undirected graph ``edges`` -> (node, rank).
+
+    ``edges`` (columns ``src``, ``dst``) must list each undirected
+    edge once: the operator adds the reverse orientation itself and
+    does not deduplicate, and PageRank, unlike BFS, is sensitive to
+    parallel edges (multiplicity changes contributions).
 
     Each iteration is one hash join (ranks onto edges) plus one
     groupBy-sum of contributions — two shuffles on the node key, no
-    driver-side state, same scale shape as connected_components.
-    Degrees are precomputed once; an undirected graph has no dangling
-    nodes, so total rank mass is conserved at exactly N (asserted in
-    tests/test_graphs.py). Fixed iteration count (no convergence
-    action): the residual contracts by the damping factor per round
-    (0.85^10 ≈ 0.20 of the initial gap after 10) — accepted because
-    rank ORDERING stabilizes much earlier than the values, the
-    standard fixed-round batch tradeoff instead of a fixpoint loop
-    with per-round convergence actions.
+    driver-side state. Degrees are precomputed once; an undirected
+    graph has no dangling nodes, so total rank mass is conserved at
+    exactly N (asserted in tests/test_graphs.py). Fixed iteration
+    count (no convergence action): the residual contracts by the
+    damping factor per round (0.85^10 ≈ 0.20 of the initial gap after
+    10) — accepted because rank ORDERING stabilizes much earlier than
+    the values, the standard fixed-round batch tradeoff instead of a
+    fixpoint loop with per-round convergence actions.
 
     Caller contract (ADVICE r11): the returned rank table is NOT
     checkpointed/persisted — reference it ONCE per action. A caller
     that consumes it from two places (both join sides, repeated
-    actions) re-executes the whole kernel (and the upstream distinct)
-    per reference and must checkpoint/persist at the call site."""
-    # symmetrize_dedup=False lets a caller who GUARANTEES the input
-    # is already duplicate-free with disjoint orientations (e.g. the
-    # even/odd-encoded bipartite graphs, where a swapped pair can
-    # never collide with an original) skip one full edge-sized
-    # shuffle. Unlike BFS, PageRank is NOT insensitive to parallel
-    # edges — multiplicity changes contributions — so the dedup
-    # stays on by default.
-    if small_finish_rows is not None:
-        # The gate's count would otherwise recompute the caller's
-        # (typically distinct-ed) edge build a second time for the
-        # sym feed — materialize it once; the join loop below was
-        # going to checkpoint the annotated edge table anyway.
-        edges = edges.localCheckpoint(eager=True)
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    actions) re-executes the whole kernel per reference and must
+    checkpoint/persist at the call site."""
+    # The gate's count would otherwise recompute the caller's
+    # (typically distinct-ed) edge build a second time for the sym
+    # feed — materialize it once; the join loop below was going to
+    # checkpoint the annotated edge table anyway.
+    edges = edges.localCheckpoint(eager=True)
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).union(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
-    if symmetrize_dedup:
-        sym = sym.distinct()
 
     # Count-gated single-task finisher (the kcore/ktruss/bfs
     # discipline): a bounded edge table runs all rounds as one
     # vectorized numpy power iteration in one Arrow task — identical
-    # recursion, same per-edge contribution semantics (parallel
-    # edges contribute per row, exactly as the join form), float
+    # recursion, same per-edge contribution semantics, float
     # summation order differs only within np.bincount, which is why
     # the float operator is declared rows-only and the BIGINT twin
     # (E289) carries the hash check. Above the gate the join loop
     # below is the 100 TB path.
-    if probe.gate(
-        "pagerank",
-        small_finish_rows is not None
-        and edges.count() * 2 <= small_finish_rows,
-    ):
-        n_iters, d_factor = iters, _DAMPING
+    if probe.gate("pagerank", edges.count() * 2 <= _PAGERANK_GATE):
+        n_iters, d_factor = _PAGERANK_ITERS, _DAMPING
 
         def pr(pdf):
             import numpy as np
@@ -267,17 +180,17 @@ def pagerank(
     # job. Measured on the sf0.1 part-supplier graph: 4.4 s with a
     # checkpoint every 5 hops vs 4.0 s warm / 4.9 vs 9.2 s cold
     # without (each checkpoint is a full materialization job plus a
-    # second codegen pass over the same plan shapes). Callers pushing
-    # iters far beyond ~20 should re-introduce a periodic checkpoint
-    # for plan depth, not for correctness.
+    # second codegen pass over the same plan shapes). Raising
+    # _PAGERANK_ITERS far beyond ~20 would need a periodic checkpoint
+    # again, for plan depth, not for correctness.
     # NOTE: this loop deliberately KEEPS AQE on (unlike
-    # connected_components_star's fixpoint_confs): each hop's
+    # connected_components' fixpoint_confs): each hop's
     # edge x rank join benefits from AQE's runtime broadcast
     # conversion of the small rank side — measured 5.6 s with AQE vs
     # 7.3 s without on the sf0.1 part-supplier graph. The star loop's
     # groupBy-heavy phases have no broadcast opportunity, which is
     # why the same tuning wins there and loses here.
-    for _ in range(iters):
+    for _ in range(_PAGERANK_ITERS):
         ranks = hop(ranks)
     return ranks
 
@@ -390,25 +303,24 @@ def pagerank_exact(
     return r
 
 
-def bfs_hops(
-    edges: DataFrame,
-    source: str,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 10,
-    small_finish_rows: int | None = None,
-) -> DataFrame:
-    """Breadth-first minimum-hop distances from ``source`` over the
-    undirected graph ``edges`` -> (node, hop), source included at 0.
+_BFS_HOPS = 6
+# Kernel gate in input edges (patchable; tests force the distributed
+# branch). The walk holds a Python adjacency dict of the edge table.
+_BFS_GATE = 4_000_000
 
-    Frontier expansion, not label propagation: each round joins only
-    the NEW frontier against the edge table and anti-joins the
-    visited set — per round two shuffles proportional to the frontier,
-    so total work is O(edges x diameter) worst case but typically one
-    edge-pass overall. Same lineage discipline as
-    ``connected_components``: localCheckpoint per round, convergence
-    via an empty-frontier count, deterministic result (min-hop is
-    unique regardless of expansion order).
+
+def bfs_hops(edges: DataFrame, source) -> DataFrame:
+    """Breadth-first minimum-hop distances from ``source`` over the
+    undirected graph ``edges`` (columns ``src``, ``dst``) ->
+    (node, hop) for every node within ``_BFS_HOPS`` hops, source
+    included at 0.
+
+    Under the gate the whole BFS runs in one bounded Arrow task as an
+    in-memory adjacency walk (the kcore/ktruss/dbscan discipline):
+    even the unrolled one-job form below pays ~13 scheduled shuffles
+    of fixed local cost on a 6-hop query, and the kernel replaces them
+    with one scan + one task. Min-hop is expansion-order-independent,
+    so both branches return identical rows.
 
     The symmetrized edge table is deliberately NOT deduplicated:
     min-hop is insensitive to parallel edges (each hop's candidate
@@ -422,27 +334,13 @@ def bfs_hops(
     per hop (measured 7.8 -> 4.0 s cold, 3.9 -> 3.6 warm at sf0.1;
     the same tradeoff holds on a cluster, where the checkpoint costs
     executor memory/disk proportional to the edge table while hops
-    are few).
-
-    ``small_finish_rows``: the count-gated single-task discipline
-    (kcore/ktruss/dbscan pattern) — when the edge table fits one
-    bounded Arrow task, run the whole BFS as an in-memory adjacency
-    walk there (min-hop is expansion-order-independent, so the
-    result is identical to the join loop); above the gate the
-    distributed paths below take over unchanged. Even the unrolled
-    one-job form pays ~13 scheduled shuffles of fixed local cost on
-    a 6-hop query; the kernel replaces them with one scan + one
-    task."""
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    are few)."""
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).union(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
-    spark = edges.sparkSession
 
-    if probe.gate(
-        "bfs_hops",
-        small_finish_rows is not None and 0 < edges.count() <= small_finish_rows,
-    ):
-        hops_cap = max_hops
+    if probe.gate("bfs_hops", 0 < edges.count() <= _BFS_GATE):
+        hops_cap = _BFS_HOPS
         src_node = source
 
         def walk(pdf):
@@ -470,56 +368,30 @@ def bfs_hops(
             sym, walk, f"node {out_type}, hop int"
         ).localCheckpoint(eager=True)
 
-    if max_hops <= 8:
-        # Bounded-hop fast path: unroll every hop into ONE lazy plan
-        # (no per-hop actions, checkpoints, or empty-frontier count
-        # jobs) and take min(hop) per node at the end — the driver
-        # round-trips, not the data, dominate a 4-6 hop blast-radius
-        # query (measured 3.9 -> 2.4 s warm, 8.1 -> 3.4 s cold at
-        # sf0.1). The frontier deliberately skips the anti-join
-        # against visited: min(hop) absorbs re-reached nodes, and
-        # bounded hops cap the re-expansion at max_hops x |E| —
-        # exchange reuse collapses the doubled cand references. The
-        # cap of 8 guards both that re-expansion bound and the 2^h
-        # logical-subtree growth; deeper searches take the
-        # early-terminating frontier loop below.
-        levels = [spark.createDataFrame([(source, 0)], ["node", "hop"])]
-        frontier = levels[0].select("node")
-        for h in range(1, max_hops + 1):
-            cand = (
-                frontier.join(sym, frontier["node"] == sym["a"])
-                .select(F.col("b").alias("node"))
-                .distinct()
-            )
-            levels.append(cand.withColumn("hop", F.lit(h)))
-            frontier = cand
-        allv = levels[0]
-        for lvl in levels[1:]:
-            allv = allv.unionByName(lvl)
-        return allv.groupBy("node").agg(F.min("hop").alias("hop"))
-
-    visited = spark.createDataFrame([(source, 0)], ["node", "hop"])
-    frontier = visited
-    for h in range(1, max_hops + 1):
-        nxt = (
+    # Unroll every hop into ONE lazy plan (no per-hop actions,
+    # checkpoints, or empty-frontier count jobs) and take min(hop) per
+    # node at the end — the driver round-trips, not the data, dominate
+    # a 6-hop blast-radius query (measured 3.9 -> 2.4 s warm, 8.1 ->
+    # 3.4 s cold at sf0.1 against an early-terminating frontier loop).
+    # The frontier deliberately skips the anti-join against visited:
+    # min(hop) absorbs re-reached nodes, and the fixed hop count caps
+    # the re-expansion at _BFS_HOPS x |E| — exchange reuse collapses
+    # the doubled cand references. Both that bound and the 2^h
+    # logical-subtree growth keep _BFS_HOPS small (at most ~8).
+    levels = [edges.sparkSession.createDataFrame([(source, 0)], ["node", "hop"])]
+    frontier = levels[0].select("node")
+    for h in range(1, _BFS_HOPS + 1):
+        cand = (
             frontier.join(sym, frontier["node"] == sym["a"])
             .select(F.col("b").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:
-            break
-        # visited is a UNION of already-checkpointed frontiers — a
-        # lineage tree at most max_hops deep with materialized leaves,
-        # so it needs no checkpoint of its own. Dropping it halves the
-        # loop's materialization jobs (measured 2x on the bench graph).
-        # AQE stays ON here: the frontier x edges join relies on AQE's
-        # runtime broadcast of the small frontier side.
-        visited = visited.union(nxt)
-        frontier = nxt
-    return visited
+        levels.append(cand.withColumn("hop", F.lit(h)))
+        frontier = cand
+    allv = levels[0]
+    for lvl in levels[1:]:
+        allv = allv.unionByName(lvl)
+    return allv.groupBy("node").agg(F.min("hop").alias("hop"))
 
 
 def _union_find_one_task(e: DataFrame) -> DataFrame:
@@ -567,53 +439,58 @@ def _union_find_one_task(e: DataFrame) -> DataFrame:
     return probe.single_task(e, union_find, out_schema)
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    small_finish_rows: int | None = None,
+# Union-find finisher gate in canonical edges (patchable; tests force
+# the star loop). The finisher holds a Python dict per edge-incident
+# node, tens of MB at the gate.
+_CC_GATE = 2_000_000
+_CC_MAX_ROUNDS = 25
+
+
+def connected_components(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") -> (node, comp), comp = component min, identical
-    fixpoint to :func:`connected_components`.
+    """Connected components of the undirected graph ``edges`` ->
+    (node, comp), comp = the minimum node id of the component.
 
-    Use this for HIGH-DIAMETER graphs: min-label propagation needs
-    O(diameter)-ish rounds (a 250-hop geometric eps-graph needs 40+
-    even with pointer jumping), while star contraction rewires edges
-    toward local minima and converges in O(log^2 n) — measured 8-9
-    rounds on both a 15k-node eps-graph and 500-long chains. Each
-    round is two phases of (neighborhood-min aggregate + edge join +
-    distinct), i.e. a constant number of node-key shuffles, no driver
-    graph state; per-round frames are rerooted (see
-    caching.reroot) to dodge the self-join re-execution pathology.
-    Convergence is detected by an order-free xxhash64 bit_xor
-    fingerprint of the edge set. A fingerprint collision between two
-    DISTINCT consecutive edge sets would stop the loop on a
-    non-converged graph and return wrong components; the probability
-    is ~2^-64 per compared round (the count is also compared, so the
-    sets must additionally be equal-sized), which this operator
-    accepts in exchange for skipping an exact set-difference job per
-    round — callers needing certainty can verify the returned
-    labeling (one semi-join: no edge may cross components).
+    Only nodes incident to an edge between two distinct nodes appear:
+    self-loops are dropped, and callers union isolated nodes back if
+    they need them (for dedup clustering, un-paired docs are their own
+    survivors and never need a cluster row).
 
-    Only nodes incident to an edge appear, as in
-    :func:`connected_components`.
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): star contraction
+    rewires edges toward local minima and converges in O(log^2 n)
+    rounds whatever the diameter — measured 8-9 rounds on both a
+    15k-node eps-graph and 500-long chains, where label propagation
+    would need a round per diameter hop. Each round is two phases of
+    (neighborhood-min aggregate + edge join + distinct), i.e. a
+    constant number of node-key shuffles, no driver graph state;
+    per-round frames are rerooted (see caching.reroot) to dodge the
+    self-join re-execution pathology. Convergence is detected by an
+    order-free xxhash64 bit_xor fingerprint of the edge set. A
+    fingerprint collision between two DISTINCT consecutive edge sets
+    would stop the loop on a non-converged graph and return wrong
+    components; the probability is ~2^-64 per compared round (the
+    count is also compared, so the sets must additionally be
+    equal-sized), which this operator accepts in exchange for
+    skipping an exact set-difference job per round — callers needing
+    certainty can verify the returned labeling (one semi-join: no
+    edge may cross components). Raises ``RuntimeError`` if
+    ``_CC_MAX_ROUNDS`` rounds don't reach the fixpoint, rather than
+    silently returning partial components.
 
-    ``small_finish_rows`` (opt-in): once seed contraction has shrunk
-    the edge set to at most this many rows, finish with a SINGLE-TASK
-    union-find (:func:`probe.single_task`) instead of the star
-    loop. Locally the star loop's cost is rounds x fixed per-stage
-    scheduling regardless of data size (~0.5 s/round on a 1.3k-edge
-    graph), so an O(edges alpha(edges)) one-task finisher beats ~8
-    scheduled rounds outright; at cluster scale the same pattern
-    holds — seed passes (each a constant number of node-key shuffles,
-    halving-or-better per pass) run until the remainder fits one
-    bounded task, the way production graph engines finish small
-    remainders. Extra seed passes compose into the expansion label
-    map, so the returned labeling is identical to the star loop's.
-    Callers on the pure-JVM path (plan-audit surface) leave it None.
+    Once the edge set fits ``_CC_GATE`` rows — at once, or after seed
+    contraction — a SINGLE-TASK union-find (:func:`probe.single_task`)
+    finishes instead of the star loop. Locally the star loop's cost
+    is rounds x fixed per-stage scheduling regardless of data size
+    (~0.5 s/round on a 1.3k-edge graph), so an O(edges alpha(edges))
+    one-task finisher beats ~8 scheduled rounds outright; at cluster
+    scale the same pattern holds — seed passes (each a constant
+    number of node-key shuffles, halving-or-better per pass) run
+    until the remainder fits one bounded task, the way production
+    graph engines finish small remainders. Extra seed passes compose
+    into the expansion label map, so the returned labeling is
+    identical to the star loop's.
     """
     # Normalize to the undirected canonical form (u < v) BEFORE the
     # dedup: an input carrying both orientations (typical for
@@ -630,18 +507,17 @@ def connected_components_star(
         .localCheckpoint()
     )
 
-    if small_finish_rows is not None:
-        # Fast path (r11): if the CANONICAL edge set already fits the
-        # one-task finisher, skip seed contraction outright — the seed
-        # pass costs two checkpointed shuffle subtrees plus a
-        # fingerprint job, pure per-job scheduling floor on a graph the
-        # union-find kernel finishes in one bounded task anyway. The
-        # count is one cheap job over the already-checkpointed blocks.
-        # Output is identical: the kernel emits (node, comp=component
-        # min) for exactly the edge-incident nodes, the same contract
-        # expand(memb) reconstructs on the contracted path.
-        if probe.gate("cc_star", edges0.count() <= small_finish_rows):
-            return _union_find_one_task(edges0)
+    # Fast path (r11): if the CANONICAL edge set already fits the
+    # one-task finisher, skip seed contraction outright — the seed
+    # pass costs two checkpointed shuffle subtrees plus a fingerprint
+    # job, pure per-job scheduling floor on a graph the union-find
+    # kernel finishes in one bounded task anyway. The count is one
+    # cheap job over the already-checkpointed blocks. Output is
+    # identical: the kernel emits (node, comp=component min) for
+    # exactly the edge-incident nodes, the same contract expand(memb)
+    # reconstructs on the contracted path.
+    if probe.gate("cc_star", edges0.count() <= _CC_GATE):
+        return _union_find_one_task(edges0)
 
     def sym_of(e: DataFrame) -> DataFrame:
         return e.select("u", "v").union(
@@ -721,48 +597,49 @@ def connected_components_star(
         probe.record_branch("cc_star", "seed_collapsed")
         return lbl.select(F.col("u").alias("node"), F.col("l").alias("comp"))
 
-    e = contracted
-    if small_finish_rows is not None:
-        n_edges = fp[0]
-        # Extra seed passes (same contraction as above, composed into
-        # the expansion map) until the remainder fits one task. Each
-        # pass at least halves a path graph and collapses dense blobs
-        # outright, so the pass count is log-bounded; the cap is a
-        # safety net, after which the star loop takes over.
-        for _ in range(8):
-            if n_edges <= small_finish_rows:
-                break
-            l2 = (
-                sym_of(e)
-                .groupBy("u")
-                .agg(F.least(F.min("v"), F.first("u")).alias("l"))
-                .localCheckpoint()
+    e, n_edges = contracted, fp[0]
+    # Extra seed passes (same contraction as above, composed into the
+    # expansion map) until the remainder fits one task. Each pass at
+    # least halves a path graph and collapses dense blobs outright, so
+    # the pass count is log-bounded; the cap is a safety net, after
+    # which the star loop takes over.
+    for _ in range(8):
+        if n_edges <= _CC_GATE:
+            break
+        l2 = (
+            sym_of(e)
+            .groupBy("u")
+            .agg(F.least(F.min("v"), F.first("u")).alias("l"))
+            .localCheckpoint()
+        )
+        e = (
+            e.join(l2.select(F.col("u"), F.col("l").alias("lu")), "u")
+            .join(
+                l2.select(F.col("u").alias("v"), F.col("l").alias("lv")),
+                "v",
             )
-            e = (
-                e.join(l2.select(F.col("u"), F.col("l").alias("lu")), "u")
-                .join(
-                    l2.select(F.col("u").alias("v"), F.col("l").alias("lv")),
-                    "v",
-                )
-                .select(
-                    F.least(F.col("lu"), F.col("lv")).alias("u"),
-                    F.greatest(F.col("lu"), F.col("lv")).alias("v"),
-                )
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint()
+            .select(
+                F.least(F.col("lu"), F.col("lv")).alias("u"),
+                F.greatest(F.col("lu"), F.col("lv")).alias("v"),
             )
-            lbl = reroot(
-                lbl.join(
-                    l2.select(F.col("u").alias("l"), F.col("l").alias("l2")),
-                    "l",
-                    "left",
-                ).select("u", F.coalesce("l2", "l").alias("l"))
-            )
-            n_edges = e.count()
-        if probe.gate("cc_star", n_edges <= small_finish_rows):
-            memb = _union_find_one_task(e)
-            return expand(memb)
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        lbl = reroot(
+            lbl.join(
+                l2.select(F.col("u").alias("l"), F.col("l").alias("l2")),
+                "l",
+                "left",
+            ).select("u", F.coalesce("l2", "l").alias("l"))
+        )
+        n_edges = e.count()
+    # A remainder the extra passes emptied (possible only with the gate
+    # patched below the contracted size) skips the kernel: the star
+    # loop returns the expansion at its first fingerprint check.
+    if probe.gate("cc_star", 0 < n_edges <= _CC_GATE):
+        return expand(_union_find_one_task(e))
+    if e is not contracted:
         fp = fingerprint(e)
 
     # Per-round cost in the fixpoint loop is dominated by FIXED
@@ -777,7 +654,7 @@ def connected_components_star(
     # fingerprint's count.
     spark = edges0.sparkSession
     with fixpoint_confs(spark, enabled=fp[0] < 5_000_000):
-        for rnd in range(max_iter):
+        for rnd in range(_CC_MAX_ROUNDS):
             # One reroot per round: the two star phases chain within a
             # round (bounded re-execution), and the reroot severs the
             # cross-round id lineage that triggers the re-execution
@@ -794,8 +671,8 @@ def connected_components_star(
             # one falls on an unchecked parity): checking only the
             # final round left `fp` two rounds stale when the cap
             # landed on even parity, so a graph converging exactly at
-            # round max_iter-1 raised despite being converged.
-            if rnd % 2 == 0 and rnd < max_iter - 2:
+            # round _CC_MAX_ROUNDS-1 raised despite being converged.
+            if rnd % 2 == 0 and rnd < _CC_MAX_ROUNDS - 2:
                 continue
             fp_new = fingerprint(e)
             if fp_new == fp:
@@ -811,5 +688,5 @@ def connected_components_star(
                 return expand(memb)
             fp = fp_new
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} iterations"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
         )

@@ -479,6 +479,11 @@ def cosine_pandas_udf(query_vec: list[float]):
     return cos_udf
 
 
+# Lloyd kernel gate in vectors (patchable; tests force the distributed
+# branch). The kernel holds the (rows x dim) float64 matrix.
+_KMEANS_GATE = 500_000
+
+
 def kmeans_train(
     emb: DataFrame,
     k: int = 8,
@@ -486,7 +491,6 @@ def kmeans_train(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    small_finish_rows: int | None = None,
 ) -> DataFrame:
     """Spherical k-means (Lloyd) centroid training, pure DataFrame:
     assignment is the existing broadcast argmax (``ivf_assign``), the
@@ -500,8 +504,8 @@ def kmeans_train(
     (standard Lloyd handling). Upgrades ``deterministic_centroids``
     seeding into a trained IVF coarse quantizer.
 
-    ``small_finish_rows``: count-gated single-task finisher (the
-    bfs/pagerank/kcore discipline) — a bounded vector table trains
+    Count-gated single-task finisher (the bfs/pagerank/kcore
+    discipline): under ``_KMEANS_GATE`` rows the vector table trains
     all rounds as one vectorized numpy Lloyd in one Arrow task: same
     seeding, same (score desc, cent_id asc) assignment tiebreak,
     same empty-cluster drop; centroid floats may differ from the
@@ -509,10 +513,7 @@ def kmeans_train(
     summation order), which is inside the float operator's declared
     rows-only contract. Above the gate the per-round loop below is
     the 100 TB path."""
-    if probe.gate(
-        "kmeans",
-        small_finish_rows is not None and emb.count() <= small_finish_rows,
-    ):
+    if probe.gate("kmeans", emb.count() <= _KMEANS_GATE):
         n_iters, n_k = iters, k
 
         def lloyd(pdf):

@@ -597,7 +597,7 @@ def q_kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # The sparsified edge list is O(nodes) by construction (the c*
     # cutoff pins average degree ~10), so route it the same way as
-    # connected_components_star's finisher: when it fits one bounded
+    # connected_components' finisher: when it fits one bounded
     # task, run all 6 peel rounds in a single mapInPandas kernel
     # (pure integer counting — identical result to the scheduled
     # loop); above the threshold, the scheduled broadcast-semi-join

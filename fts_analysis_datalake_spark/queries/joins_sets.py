@@ -1277,8 +1277,8 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the supplier projections of this fixture are complete cliques,
     where any LPA floods to one label, while this graph yields
     10/131/1078 communities at sf0.001/0.01/0.1). Differs from
-    connected components (E15): min-label CC floods entire
-    components, majority-vote LPA splits dense components into
+    connected components (E15): CC labels entire components with
+    one id, majority-vote LPA splits dense components into
     communities. One round = one edge-label hash join + one
     (node, label) count + one per-node argmax window — everything
     shuffles on node ids, label state is node-sized, never
@@ -1779,7 +1779,8 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             # _HC_SEED_GATE — int64 would be 8x the gated worst case.
             # dist[nxt] = h stores the hop number directly, so the
             # dtype silently wraps if the hop cap ever exceeds 127:
-            assert hops_cap < 128, "int8 dist matrix requires _HC_HOPS < 128"
+            if hops_cap >= 128:
+                raise ValueError("int8 dist matrix requires _HC_HOPS < 128")
             dist = np.full((k, n), -1, dtype=np.int8)
             frontier = np.zeros((k, n), dtype=bool)
             frontier[np.arange(k), seed_idx] = True

@@ -179,11 +179,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive CLUSTERS -> per-cluster canonical survivor. Pairs are
     the (lang, n_chars)-blocked exact-Jaccard >= 0.4 edges (the same
     SQL-expressible candidate generator as q_jaccard_blocked_pairs);
-    components come from iterative min-label propagation
-    (operators/graphs.py), whose unique fixpoint the oracle reproduces
-    with a recursive CTE. Iterations cost O(cluster diameter), and
-    near-dup clusters are near-cliques, so this converges in a
-    handful of shuffles even at 100 TB."""
+    components come from star contraction with a single-task
+    union-find finisher (operators/graphs.connected_components),
+    whose unique fixpoint (comp = min member id) the oracle reproduces
+    with a recursive CTE."""
     from fts_analysis_datalake_spark.operators.graphs import dedup_clusters
 
     d = load_table(spark, sf_dir, "documents")
@@ -200,15 +199,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = exact_jaccard_for_pairs(d, "doc_id", "text", pairs).filter(
         F.col("jaccard") >= _CLUSTER_J
     )
-    # r12: route CC through star-contraction's count-gated union-find
-    # fast path (identical fixpoint — same labeling contract) instead
-    # of min-label rounds: the verified dup graph fits the one-task
-    # finisher outright, skipping per-round reroot + convergence-count
-    # jobs. The E57/SemDeDup reports already took this path. A/B
-    # x0.51 (3.13 -> 1.61 s), outputs row-identical (3701 rows).
-    return dedup_clusters(
-        verified.select("id_a", "id_b"), small_finish_rows=2_000_000
-    )
+    # The verified dup graph fits the one-task union-find finisher
+    # outright, skipping per-round reroot + convergence-count jobs.
+    return dedup_clusters(verified.select("id_a", "id_b"))
 
 # --------------------------------------------------------------------------
 # E47: PageRank centrality over the part-supplier bipartite graph
@@ -264,13 +257,10 @@ def q_pagerank_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     ).distinct()
-    # symmetrize_dedup=False: edges is already distinct and the
-    # even/odd id encoding makes the two orientations disjoint, so
-    # the operator's post-union dedup would re-shuffle 2x the edge
-    # table to remove nothing.
-    ranks = pagerank(
-        edges, iters=10, symmetrize_dedup=False, small_finish_rows=4_000_000
-    )
+    # Each undirected edge once, as pagerank requires: edges is
+    # distinct, and the even/odd id encoding makes the two
+    # orientations disjoint.
+    ranks = pagerank(edges)
     return (
         ranks.select(_ps_label("node").alias("node"), "rank")
         .orderBy(F.desc("rank"), "node")
@@ -305,15 +295,12 @@ def q_dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The verified-pair set is consumed TWICE (the CC edge checkpoint
     # and the pair-count aggregate); persisting it keeps the whole
     # MinHash->LSH->verify lineage to ONE execution. Same lifecycle
-    # contract as near_dup_pairs' signature persist (bench/driver
-    # clearCache between queries releases it).
+    # contract as near_dup_pairs' signature persist
+    # (caching.release_tracked releases it after the query).
     pairs = tracked_persist(near_dup_pairs(d, "doc_id", "text", threshold=0.8))
     # Verified pairs are bounded-size by construction (LSH + exact
-    # verify ≪ corpus), so the union-find small-finish beats even the
-    # ~3 min-label rounds a near-clique graph needs (r6).
-    clusters = dedup_clusters(
-        pairs.select("id_a", "id_b"), small_finish_rows=2_000_000
-    )
+    # verify ≪ corpus), so they take the union-find finisher.
+    clusters = dedup_clusters(pairs.select("id_a", "id_b"))
     cstats = clusters.agg(
         F.count(F.lit(1)).alias("n_members"),
         F.countDistinct("cluster_id").alias("n_clusters"),
@@ -425,7 +412,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # sh feeds freq, sizes, the prefix ranking, the posting join AND
     # the collect_set verify — five consumers; persist runs the
-    # shingle lineage once (clearCache lifecycle).
+    # shingle lineage once (release_tracked lifecycle).
     sh = tracked_persist(shingle_table(d, "doc_id", "text", 3).distinct())
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -564,9 +551,9 @@ def q_bfs_hops_from_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     impact-analysis query: which parts and peers does one supplier
     touch within N relationship hops).
 
-    Spark side is distributed frontier BFS (operators/graphs.bfs_hops:
-    per round one frontier-edge join + one anti-join against visited,
-    localCheckpoint lineage truncation, empty-frontier stop). The
+    Spark side is operators/graphs.bfs_hops: a single-task adjacency
+    walk under its edge gate, else all 6 frontier-edge join hops
+    unrolled into one plan with min(hop) per node. The
     oracle is DuckDB's WITH RECURSIVE walk capped at 6 hops with
     MIN(hop) — declarative iteration checking the imperative loop,
     same pairing as the Spark-4 recursive-CTE surface (E105). The
@@ -587,7 +574,7 @@ def q_bfs_hops_from_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    hops = bfs_hops(edges, 2 * 1 + 1, max_hops=6, small_finish_rows=4_000_000)
+    hops = bfs_hops(edges, 2 * 1 + 1)
     label = F.when(
         F.col("node") % 2 == 0, F.concat(F.lit("p"), (F.col("node") / 2).cast("long"))
     ).otherwise(F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long")))
@@ -1570,7 +1557,7 @@ def q_dedup_pipeline_md5_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The E57 pipeline REPORT with every number value-verified (r6):
     md5 MinHash-LSH verified pairs (the E275 twin, reused as a
     subplan — composability pinned the same way E190's MMR feeds the
-    diversification audit) -> min-label connected components -> the
+    diversification audit) -> connected components -> the
     one-row survivor accounting (docs, pairs, clusters, members,
     kept = docs - members + clusters). The xxhash64
     q_dedup_pipeline_report stays the production path; THIS row makes
@@ -1582,9 +1569,8 @@ def q_dedup_pipeline_md5_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = tracked_persist(
         q_minhash_lsh_md5_pairs(spark, sf_dir).select("id_a", "id_b")
     )
-    # Verified pairs are bounded-size; union-find small-finish beats
-    # the scheduled min-label rounds (same routing as E57/E103).
-    clusters = dedup_clusters(pairs, small_finish_rows=2_000_000)
+    # Verified pairs are bounded-size: the union-find finisher runs.
+    clusters = dedup_clusters(pairs)
     d = load_table(spark, sf_dir, "documents")
     dstats = d.agg(
         (

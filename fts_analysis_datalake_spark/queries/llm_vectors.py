@@ -388,7 +388,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # training-frame move; at 100 TB this is the difference between
     # 6 parquet scans and 6 memory scans.
     emb = tracked_persist(load_table(spark, sf_dir, "embeddings"))
-    cents = kmeans_train(emb, k=8, iters=5, small_finish_rows=500_000)
+    cents = kmeans_train(emb, k=8, iters=5)
     assigned = ivf_assign(emb, cents)
     cos = cosine(F.col("embedding"), F.col("cent_vec"))
     return (
@@ -854,7 +854,7 @@ def q_ivf_trained_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id") != QUERY_VEC_ID
         )
     )
-    cents = kmeans_train(e, k=8, iters=3, small_finish_rows=500_000)
+    cents = kmeans_train(e, k=8, iters=3)
     return ivf_topk(e, _query_vec(spark, sf_dir), k=10, nprobe=3, centroids=cents)
 
 
@@ -892,12 +892,9 @@ def q_semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run the assign+self-join lineage once (same contract as E57).
     pairs = tracked_persist(semantic_dedup_pairs(e, _SEMDEDUP_T))
     # The cos>=0.3 graph over near-orthogonal fixtures is
-    # quasi-random, not near-clique — min-label CC pays a scheduled
-    # round per diameter hop there. Route through seed contraction +
-    # the bounded union-find finisher instead (4.2 -> ~0.8 s).
-    clusters = dedup_clusters(
-        pairs.select("id_a", "id_b"), small_finish_rows=2_000_000
-    )
+    # quasi-random, not near-clique; seed contraction + the bounded
+    # union-find finisher handle it without a round per diameter hop.
+    clusters = dedup_clusters(pairs.select("id_a", "id_b"))
     cstats = clusters.agg(
         F.count(F.lit(1)).alias("n_members"),
         F.countDistinct("cluster_id").alias("n_clusters"),

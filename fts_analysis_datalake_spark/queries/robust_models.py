@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from fts_analysis_datalake_spark import probe
 from fts_analysis_datalake_spark.caching import tracked_persist
 from fts_analysis_datalake_spark.catalog import load_table
-from fts_analysis_datalake_spark.operators.graphs import connected_components_star
+from fts_analysis_datalake_spark.operators.graphs import connected_components
 from fts_analysis_datalake_spark.operators.text import (
     BPE_ISH_PATTERN,
     normalize_text,
@@ -510,7 +510,7 @@ def q_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates come from the same 1-degree 3x3 cell cover as E223
     (never points^2); core points are one HAVING over the neighbor
     aggregate; clusters are connected components of the core-core
-    eps-graph via the repo's iterative min-label propagation, whose
+    eps-graph via operators/graphs.connected_components, whose
     fixpoint the oracle reproduces with a recursive CTE (the E15
     pattern). Border points are intentionally excluded from cluster
     membership (core-only DBSCAN* variant — deterministic, no
@@ -621,10 +621,10 @@ def q_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Small-finish: seed contraction shrinks the 322k-edge eps-graph
     # to ~1.3k edges (sf0.1); finishing those with 8 scheduled star
     # rounds costs ~4 s of pure per-stage overhead, while one bounded
-    # union-find task is milliseconds. The 2M threshold keeps the
-    # finisher task ~tens of MB at any scale; above it, extra seed
-    # passes (log-bounded) or the star loop take over.
-    cc = connected_components_star(edges, "a", "b", small_finish_rows=2_000_000)
+    # union-find task is milliseconds. The operator's 2M-edge gate
+    # keeps the finisher task ~tens of MB at any scale; above it,
+    # extra seed passes (log-bounded) or the star loop take over.
+    cc = connected_components(edges, "a", "b")
     return (
         cc.groupBy(F.col("comp").alias("cluster_id"))
         .agg(

@@ -102,3 +102,27 @@ def assert_parity(spark_df, duck_con, sql: str, name: str = "?") -> None:
         (i, a, b) for i, (a, b) in enumerate(zip(srows, drows)) if a != b
     ]
     assert not mismatches, f"{name}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
+
+
+def union_find_components(pairs) -> dict:
+    """Independent connected-components reference: {node: min node of
+    its component}, by classic union-find over the pairs. Self-loops
+    carry no connectivity and are skipped, as
+    ``operators.graphs.connected_components`` skips them, so a node
+    whose only pair is a self-loop does not appear."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            parent[find(a)] = find(b)
+    low: dict = {}
+    for n in parent:
+        root = find(n)
+        low[root] = min(low.get(root, n), n)
+    return {n: low[find(n)] for n in parent}

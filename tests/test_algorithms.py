@@ -9,32 +9,30 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR_SMALL
+from tests.conftest import SF_DIR_SMALL, union_find_components
 
 
-def test_star_cc_equals_min_label_cc(spark):
-    """Both CC implementations must produce the identical (node, comp)
-    labeling on seeded random graphs spanning sparse fragments to a
-    near-connected blob."""
-    from fts_analysis_datalake_spark.operators.graphs import (
-        connected_components,
-        connected_components_star,
-    )
+def test_star_cc_equals_min_label_cc(spark, monkeypatch):
+    """The star-contraction loop (the distributed branch of
+    connected_components) must produce the identical min-label
+    (node, comp) labeling on seeded random graphs spanning sparse
+    fragments to a near-connected blob. The min-label reference is a
+    plain Python union-find that shares no code with the operator."""
+    from fts_analysis_datalake_spark import probe
+    from fts_analysis_datalake_spark.operators.graphs import connected_components
 
+    monkeypatch.setattr(probe, "FORCE_DISTRIBUTED", True)
     for seed, n_nodes, n_edges in ((1, 60, 40), (2, 80, 90), (3, 50, 200)):
         rng = np.random.RandomState(seed)
         pairs = rng.randint(0, n_nodes, size=(n_edges, 2)).tolist()
         pairs = [(int(a), int(b)) for a, b in pairs if a != b]
         edges = spark.createDataFrame(pairs, "src long, dst long")
-        a = {
+        star = {
             (r.node, r.comp)
             for r in connected_components(edges, "src", "dst").collect()
         }
-        b = {
-            (r.node, r.comp)
-            for r in connected_components_star(edges, "src", "dst").collect()
-        }
-        assert a == b, (seed, sorted(a ^ b)[:10])
+        want = set(union_find_components(pairs).items())
+        assert star == want, (seed, sorted(star ^ want)[:10])
 
 
 def test_logistic_newton_matches_numpy(spark):
@@ -682,6 +680,13 @@ def test_count_gated_branches_agree(spark, monkeypatch):
         ("q_pagerank_quantized_exact", graphs, "_PAGERANK_EXACT_GATE", "pagerank_quantized"),
         # personalized PageRank: a seed set, so a sparse frontier
         ("q_personalized_pagerank", graphs, "_PAGERANK_EXACT_GATE", "pagerank_quantized"),
+        # connected components: the union-find finisher vs the extra
+        # seed passes + star loop (integer cluster and member counts).
+        # q_dedup_clusters cannot serve here: its sf0.001 pair graph
+        # collapses in the first seed pass ("seed_collapsed")
+        ("q_semantic_dedup_report", graphs, "_CC_GATE", "cc_star"),
+        # BFS: the dict-walk kernel vs the unrolled 6-hop plan
+        ("q_bfs_hops_from_supplier", graphs, "_BFS_GATE", "bfs_hops"),
     ]
     try:
         for name, mod, const, gate in cases:

@@ -44,13 +44,12 @@ PYTHON_SURFACE = {
     # the seed-contracted eps-graph (r6: replaces ~8 star rounds of
     # fixed per-stage scheduling on a ~1.3k-edge remainder)
     "q_semantic_dedup_report",  # E103 same union-find finisher on the
-    # quasi-random cos>=0.3 pair graph (min-label would pay a round
-    # per diameter hop)
+    # quasi-random cos>=0.3 pair graph
     "q_dedup_pipeline_report",  # E57 union-find finisher on the
     # bounded verified-pair graph
     "q_dedup_pipeline_md5_report",  # E293 same finisher, md5 twin
     "q_dedup_clusters",  # E15 union-find finisher on the blocked
-    # verified-pair graph (r12: routed off min-label rounds)
+    # verified-pair graph
     "q_mmr_diversified_topk",  # E190 greedy on the bounded 20-row
     # shortlist in one mapInPandas task (corpus stage stays JVM-side)
     "q_diversification_audit",  # E197 reuses the E190 subplan

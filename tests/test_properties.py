@@ -140,34 +140,24 @@ def test_sessionize_matches_gap_replay(spark, gaps):
     )
 )
 def test_connected_components_matches_union_find(spark, pairs):
-    """Min-label CC == classic union-find replay on arbitrary random
+    """The distributed CC branch (seed contraction + star loop, the
+    100 TB path) == classic union-find replay on arbitrary random
     graphs (self-loops, duplicate and reversed edges included) —
     hypothesis shrinks any failure to a minimal edge list, which the
     fixed LCG battery cannot."""
+    from unittest import mock
+
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.operators.graphs import connected_components
-
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        parent[find(a)] = find(b)
-    expected = {}
-    for n in parent:
-        root = find(n)
-        comp = min(m for m in parent if find(m) == root)
-        expected[n] = comp
+    from tests.conftest import union_find_components
 
     edges = spark.createDataFrame(pairs, "src BIGINT, dst BIGINT")
-    got = {r.node: r.comp for r in connected_components(edges, max_iter=40).collect()}
-    assert got == expected
+    with mock.patch.object(probe, "FORCE_DISTRIBUTED", True):
+        got = {r.node: r.comp for r in connected_components(edges).collect()}
+    assert got == union_find_components(pairs)
 
 
-def test_operators_invariant_under_repartitioning(spark):
+def test_operators_invariant_under_repartitioning(spark, monkeypatch):
     """Physical partitioning must never change results (the cluster
     contract: the same query on 1 or 1000 partitions is the same
     query). Run the lifecycle/window operators on the same logical
@@ -175,6 +165,7 @@ def test_operators_invariant_under_repartitioning(spark):
     identical output sets."""
     import datetime as dt
 
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.operators.graphs import connected_components
     from fts_analysis_datalake_spark.operators.windows import sessionize
 
@@ -187,6 +178,9 @@ def test_operators_invariant_under_repartitioning(spark):
         )
     ]
     edge_rows = [(1, 2), (2, 3), (5, 5), (7, 8), (8, 7), (3, 1)]
+    # Connected components runs its distributed branch: the kernel
+    # branch repartitions to one task, which would hide partitioning.
+    monkeypatch.setattr(probe, "FORCE_DISTRIBUTED", True)
 
     results = []
     for parts in (1, 3, 16):
@@ -223,27 +217,30 @@ def test_operators_invariant_under_repartitioning(spark):
     assert results[0] == results[1] == results[2]
 
 
-def test_operators_handle_empty_input(spark):
+def test_operators_handle_empty_input(spark, monkeypatch):
     """Empty-input contract for operator-level finishers and loops:
     at 100 TB an upstream filter can legitimately yield nothing, and
     BOTH branches (single-task kernel and distributed loop) must
     return an empty/degenerate result rather than crash — the kernel
     branch is the risky one (pd.concat over zero Arrow batches)."""
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.operators.graphs import (
         bfs_hops,
-        connected_components_star,
+        connected_components,
         pagerank,
     )
 
     empty = spark.createDataFrame([], "src BIGINT, dst BIGINT")
-    assert pagerank(empty, iters=3, small_finish_rows=10**9).count() == 0
-    assert pagerank(empty, iters=3).count() == 0
+    assert pagerank(empty).count() == 0
     # BFS from an absent source still reports the source at hop 0 in
     # both branches (distance to itself is defined without edges).
-    k = {(r.node, r.hop) for r in bfs_hops(empty, 1, max_hops=3, small_finish_rows=10**9).collect()}
-    d = {(r.node, r.hop) for r in bfs_hops(empty, 1, max_hops=3).collect()}
+    k = {(r.node, r.hop) for r in bfs_hops(empty, 1).collect()}
+    assert connected_components(empty).count() == 0
+    with monkeypatch.context() as m:
+        m.setattr(probe, "FORCE_DISTRIBUTED", True)
+        assert pagerank(empty).count() == 0
+        d = {(r.node, r.hop) for r in bfs_hops(empty, 1).collect()}
     assert k == d == {(1, 0)}
-    assert connected_components_star(empty, small_finish_rows=10**9).count() == 0
 
     ch = spark.createDataFrame([], "k BIGINT, v BIGINT, _op STRING")
     base = spark.createDataFrame([(1, 2)], "k BIGINT, v BIGINT")

@@ -128,16 +128,19 @@ def test_pandas_udf_cosine_matches_builtin(spark, emb):
     assert bad == 0
 
 
-def test_kmeans_objective_improves_monotonically(spark):
+def test_kmeans_objective_improves_monotonically(spark, monkeypatch):
     """Spherical k-means with mean-centroid updates must not decrease
     the summed cosine objective as rounds progress (Lloyd guarantee);
-    check 1 round vs 5 rounds from the same deterministic seeds."""
+    check 1 round vs 5 rounds of the distributed loop from the same
+    deterministic seeds."""
     from pyspark.sql import functions as F
 
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.catalog import load_table
     from fts_analysis_datalake_spark.functions.vector import cosine
     from fts_analysis_datalake_spark.operators.similarity import ivf_assign, kmeans_train
 
+    monkeypatch.setattr(probe, "FORCE_DISTRIBUTED", True)
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
 
     def objective(iters: int) -> float:
@@ -153,12 +156,14 @@ def test_kmeans_objective_improves_monotonically(spark):
     assert o5 >= o1 - 1e-9, (o1, o5)
 
 
-def test_kmeans_every_cluster_nonempty(spark):
+def test_kmeans_every_cluster_nonempty(spark, monkeypatch):
     from pyspark.sql import functions as F
 
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.catalog import load_table
     from fts_analysis_datalake_spark.operators.similarity import ivf_assign, kmeans_train
 
+    monkeypatch.setattr(probe, "FORCE_DISTRIBUTED", True)
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
     cents = kmeans_train(emb, k=8, iters=3)
     sizes = ivf_assign(emb, cents).groupBy("cent_id").count()
@@ -255,7 +260,7 @@ def test_semantic_dedup_report_accounting(spark):
     assert row.n_members <= row.n_vectors
 
 
-def test_kmeans_finisher_branches_agree(spark):
+def test_kmeans_finisher_branches_agree(spark, monkeypatch):
     """kmeans_train: the numpy Lloyd kernel and the per-round
     DataFrame loop (the 100 TB path) must agree on the SAME fixture —
     identical surviving centroid ids (assignment ties break the same
@@ -265,16 +270,16 @@ def test_kmeans_finisher_branches_agree(spark):
     branches explicitly."""
     import numpy as np
 
+    from fts_analysis_datalake_spark import probe
     from fts_analysis_datalake_spark.catalog import load_table
     from fts_analysis_datalake_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
     kernel = {
         r.cent_id: np.asarray(r.cent_vec)
-        for r in kmeans_train(
-            emb, k=8, iters=3, small_finish_rows=10**9
-        ).collect()
+        for r in kmeans_train(emb, k=8, iters=3).collect()
     }
+    monkeypatch.setattr(probe, "FORCE_DISTRIBUTED", True)
     dist = {
         r.cent_id: np.asarray(r.cent_vec)
         for r in kmeans_train(emb, k=8, iters=3).collect()
