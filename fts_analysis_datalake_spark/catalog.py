@@ -206,14 +206,16 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+_ROWS_PER_TASK = 1_000_000  # pair budget per task of a floored join
+_MAX_SHUFFLE_PARTITIONS = 32_768
+
+
 def ensure_shuffle_parallelism(
     df: DataFrame,
     workload_rows: int,
     keys: list[str],
-    n_keys: int | None = None,
-    max_key_workload: int | None = None,
-    rows_per_task: int = 1_000_000,
-    max_partitions: int = 32_768,
+    n_keys: int,
+    max_key_workload: int,
 ) -> DataFrame:
     """Floor a work-amplifying join's partition count by its estimated
     OUTPUT workload (pair count), not its input bytes.
@@ -232,7 +234,7 @@ def ensure_shuffle_parallelism(
     repartition on the join key, sized by the measured workload. The
     join reuses the partitioning (no extra exchange beyond the one
     the join itself required) and AQE never coalesces user-specified
-    repartitions, so the pair stage keeps ``<= rows_per_task`` pairs
+    repartitions, so the pair stage keeps ``<= _ROWS_PER_TASK`` pairs
     per task at any scale. ``workload_rows`` comes from a cheap
     domain-sized aggregate the caller already has (sum of squared
     block sizes) — the same workload-not-bytes principle as the
@@ -265,13 +267,11 @@ def ensure_shuffle_parallelism(
 
     target = max(
         df.sparkSession.sparkContext.defaultParallelism,
-        math.ceil(max(int(workload_rows), 1) / rows_per_task),
+        math.ceil(max(int(workload_rows), 1) / _ROWS_PER_TASK),
     )
-    if n_keys is not None and n_keys < target:
+    if n_keys < target or max_key_workload > _ROWS_PER_TASK:
         return df
-    if max_key_workload is not None and max_key_workload > rows_per_task:
-        return df
-    return df.repartition(min(target, max_partitions), *keys)
+    return df.repartition(min(target, _MAX_SHUFFLE_PARTITIONS), *keys)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -26,6 +26,15 @@ scripts/scale_probe.py read :func:`branches`).
 
 The runner launches no Spark job of its own: the gate's count is the
 caller's, and the kernel runs inside the consumer's action.
+
+A kernel returns the table the distributed loop ends with (node state,
+labels, surviving edges); the query's one Spark tail (order, limit,
+casts, score division) ranks it for whichever branch ran, so ordering
+and tie-breaks are written once. The runner's output is one partition,
+so that tail adds no shuffle and runs in the kernel's own task. The
+tail must read the kernel output once: a second reference, such as a
+``unionAll`` of two projections, runs the kernel twice (count edge
+endpoints with ``F.explode(F.array("u", "v"))`` instead).
 """
 
 from __future__ import annotations

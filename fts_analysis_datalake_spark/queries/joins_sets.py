@@ -1047,7 +1047,9 @@ _HITS_ONE = 1_000_000  # score unit (1e-6 rationals)
 _HITS_TOPK = 15
 # Kernel gate (patchable; tests force the distributed branch): the
 # single-task HITS replay holds O(edges) int64 arrays (~30 MB at the
-# gate; raw * one <= deg_max * 1e12 stays far inside int64).
+# gate). It also bounds the kernel's int64 sums: each raw score sums
+# at most _HITS_GATE edge terms of <= _HITS_ONE, so a_raw and h_raw
+# <= _HITS_GATE * _HITS_ONE = 2e12, and raw * one (mul_i64) <= 2e18.
 _HITS_GATE = 2_000_000
 
 
@@ -1293,9 +1295,12 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neighbor-label histogram and the (count desc, label asc) argmax,
     # exactly the distributed round's groupBy + row_number semantics
     # (lexsort is stable; runs are label-ascending within a node).
-    # Integer-exact; forced branch-equivalence tested. A/B x0.69.
+    # Either branch ends with the (node, lbl) labelling; the community
+    # count and top-k below run once in Spark, in the kernel's own task
+    # (its single-partition output needs no shuffle). Integer-exact;
+    # forced branch-equivalence tested. A/B x0.69.
     if probe.gate("lpa", 0 < edges.count() <= _LPA_GATE):
-        rounds, topk = _LPA_ROUNDS, _LPA_TOPK
+        rounds = _LPA_ROUNDS
 
         def lpa_kernel(pdf):
             import numpy as np
@@ -1326,38 +1331,33 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nl = lbl.copy()
                 nl[run_u[pick][first]] = run_l[pick][first]
                 lbl = nl
-            cnt_l, cnt_c = np.unique(lbl, return_counts=True)
-            top = np.lexsort((cnt_l, -cnt_c))[:topk]
-            return pd.DataFrame(
-                {"community": cnt_l[top], "n_members": cnt_c[top]}
-            )
+            return pd.DataFrame({"node": nodes, "lbl": lbl})
 
-        return probe.single_task(
-            edges, lpa_kernel, "community bigint, n_members bigint"
+        labels = probe.single_task(edges, lpa_kernel, "node bigint, lbl bigint")
+    else:
+        edges = edges.localCheckpoint()
+        labels = edges.select(F.col("u").alias("node")).distinct().select(
+            "node", F.col("node").alias("lbl")
         )
-    edges = edges.localCheckpoint()
-    labels = edges.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    rk_w = Window.partitionBy("node").orderBy(F.desc("c"), "lbl")
-    for _ in range(_LPA_ROUNDS):
-        counts = (
-            edges.join(
-                labels.withColumnsRenamed({"node": "ln"}),
-                F.col("ln") == F.col("v"),
+        rk_w = Window.partitionBy("node").orderBy(F.desc("c"), "lbl")
+        for _ in range(_LPA_ROUNDS):
+            counts = (
+                edges.join(
+                    labels.withColumnsRenamed({"node": "ln"}),
+                    F.col("ln") == F.col("v"),
+                )
+                .groupBy(F.col("u").alias("node"), "lbl")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-            .groupBy(F.col("u").alias("node"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            counts.withColumn("rk", F.row_number().over(rk_w))
-            .filter(F.col("rk") == 1)
-            .select("node", "lbl")
-            # r11: no per-round checkpoint — the label state is
-            # referenced exactly once per round, lineage stays linear,
-            # all rounds compile into one job (A/B x0.89, every rep
-            # faster; same pattern as q_personalized_pagerank).
-        )
+            labels = (
+                counts.withColumn("rk", F.row_number().over(rk_w))
+                .filter(F.col("rk") == 1)
+                .select("node", "lbl")
+                # r11: no per-round checkpoint — the label state is
+                # referenced exactly once per round, lineage stays
+                # linear, all rounds compile into one job (A/B x0.89,
+                # every rep faster; same as q_personalized_pagerank).
+            )
     return (
         labels.groupBy(F.col("lbl").cast("bigint").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
@@ -1441,9 +1441,12 @@ def q_bellman_ford_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounds run in ONE bounded task — dist[v] = min(dist[v],
     # min over (u,v,w) of dist[u] + w) as np.minimum.at, source = min
     # node, integer-exact, identical fixpoint to the join loop below.
-    # Forced branch-equivalence tested. A/B x0.72.
+    # Either branch ends with the reached (node, d) table; the top-k
+    # below ranks it once (TakeOrderedAndProject sits directly on the
+    # kernel's single-partition output). Forced branch-equivalence
+    # tested. A/B x0.72.
     if probe.gate("bellman_ford", 0 < sym.count() <= _BF_GATE):
-        rounds, topk = _BF_ROUNDS, _BF_TOPK
+        rounds = _BF_ROUNDS
 
         def bf_kernel(pdf):
             import numpy as np
@@ -1464,34 +1467,33 @@ def q_bellman_ford_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 np.minimum.at(nd, vi[fin], dist[ui[fin]] + w[fin])
                 dist = nd
             fin = dist != inf
-            dn, dd = nodes[fin], dist[fin]
-            top = np.lexsort((dn, dd))[:topk]
-            return pd.DataFrame({"node": dn[top], "dist": dd[top]})
+            return pd.DataFrame({"node": nodes[fin], "d": dist[fin]})
 
-        return probe.single_task(sym, bf_kernel, "node bigint, dist bigint")
-    # Weight-0 self-loops make each relaxation round a SINGLE
-    # join+min over the edge table (the self-loop row carries the
-    # node's current dist), so `dist` is referenced once per round
-    # and the loop's lineage stays linear — no plan doubling, no
-    # mid-loop checkpoints, one compiled job for all rounds.
-    edges = sym.unionAll(
-        sym.select("u").distinct().select(
-            "u", F.col("u").alias("v"), F.lit(0).cast("bigint").alias("w")
-        )
-    ).localCheckpoint()
-    dist = (
-        edges.agg(F.min("u").alias("node"))
-        .select("node", F.lit(0).cast("bigint").alias("d"))
-    )
-    for _ in range(_BF_ROUNDS):
-        dist = (
-            edges.join(
-                dist.withColumnsRenamed({"node": "pu", "d": "pd"}),
-                F.col("pu") == F.col("u"),
+        dist = probe.single_task(sym, bf_kernel, "node bigint, d bigint")
+    else:
+        # Weight-0 self-loops make each relaxation round a SINGLE
+        # join+min over the edge table (the self-loop row carries the
+        # node's current dist), so `dist` is referenced once per round
+        # and the loop's lineage stays linear — no plan doubling, no
+        # mid-loop checkpoints, one compiled job for all rounds.
+        edges = sym.unionAll(
+            sym.select("u").distinct().select(
+                "u", F.col("u").alias("v"), F.lit(0).cast("bigint").alias("w")
             )
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min(F.col("pd") + F.col("w")).alias("d"))
+        ).localCheckpoint()
+        dist = (
+            edges.agg(F.min("u").alias("node"))
+            .select("node", F.lit(0).cast("bigint").alias("d"))
         )
+        for _ in range(_BF_ROUNDS):
+            dist = (
+                edges.join(
+                    dist.withColumnsRenamed({"node": "pu", "d": "pd"}),
+                    F.col("pu") == F.col("u"),
+                )
+                .groupBy(F.col("v").alias("node"))
+                .agg(F.min(F.col("pd") + F.col("w")).alias("d"))
+            )
     return (
         dist.select("node", F.col("d").alias("dist"))
         .orderBy("dist", "node")
@@ -1731,11 +1733,6 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
     )
     sym = _undirect(e0).localCheckpoint(eager=True)
-    seeds = (
-        sym.filter(F.col("u") % _HC_SEED_MOD == 1)
-        .select(F.col("u").alias("s"))
-        .distinct()
-    )
     # Count-gated single-task finisher (bfs_hops discipline): on the
     # near-complete thresholded graph the hop-2 multi-source frontier
     # is ~seeds x nodes x degree rows (measured 9 s at sf0.1 in the
@@ -1747,7 +1744,9 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every node) and seeds (the frontier/matmul side). The cheap
     # edge count runs first and alone on the 100 TB path; the
     # distinct-aggregation shuffle only happens once the edge gate
-    # has already admitted a small graph.
+    # has already admitted a small graph. Either branch ends with the
+    # per-node (node, h_q, n_seeds_reached) sums; the top-k below
+    # ranks them once, in the kernel's own task.
     take_kernel = sym.count() <= _HC_GATE
     if take_kernel:
         n_nodes, n_seeds = sym.agg(
@@ -1828,47 +1827,43 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_type = dict(sym.dtypes)["u"]
         cent = probe.single_task(
             sym, multi_bfs, f"node {out_type}, h_q bigint, n_seeds_reached bigint"
-        ).localCheckpoint(eager=True)
-        return (
-            cent.select(
-                "node",
-                (F.col("h_q") / 1000000000.0).alias("harmonic"),
-                "n_seeds_reached",
-                "h_q",
-            )
-            .orderBy(F.desc("h_q"), "node")
-            .limit(_HC_TOPK)
-            .select("node", "harmonic", "n_seeds_reached")
         )
-
-    levels = [seeds.select("s", F.col("s").alias("node"), F.lit(0).alias("hop"))]
-    frontier = levels[0].select("s", "node")
-    for h in range(1, _HC_HOPS + 1):
-        cand = (
-            frontier.join(sym, frontier["node"] == sym["u"])
-            .select("s", F.col("v").alias("node"))
+    else:
+        seeds = (
+            sym.filter(F.col("u") % _HC_SEED_MOD == 1)
+            .select(F.col("u").alias("s"))
             .distinct()
         )
-        levels.append(cand.withColumn("hop", F.lit(h)))
-        frontier = cand
-    allv = levels[0]
-    for lvl in levels[1:]:
-        allv = allv.unionByName(lvl)
-    dist = allv.groupBy("s", "node").agg(F.min("hop").alias("d"))
-    cent = (
-        dist.filter(F.col("d") >= 1)
-        .groupBy("node")
-        .agg(
-            F.sum(
-                F.floor(F.lit(1000000000.0) / F.col("d") + F.lit(0.5)).cast(
-                    "bigint"
-                )
+        levels = [
+            seeds.select("s", F.col("s").alias("node"), F.lit(0).alias("hop"))
+        ]
+        frontier = levels[0].select("s", "node")
+        for h in range(1, _HC_HOPS + 1):
+            cand = (
+                frontier.join(sym, frontier["node"] == sym["u"])
+                .select("s", F.col("v").alias("node"))
+                .distinct()
             )
-            .cast("bigint")
-            .alias("h_q"),
-            F.count(F.lit(1)).cast("bigint").alias("n_seeds_reached"),
+            levels.append(cand.withColumn("hop", F.lit(h)))
+            frontier = cand
+        allv = levels[0]
+        for lvl in levels[1:]:
+            allv = allv.unionByName(lvl)
+        dist = allv.groupBy("s", "node").agg(F.min("hop").alias("d"))
+        cent = (
+            dist.filter(F.col("d") >= 1)
+            .groupBy("node")
+            .agg(
+                F.sum(
+                    F.floor(
+                        F.lit(1000000000.0) / F.col("d") + F.lit(0.5)
+                    ).cast("bigint")
+                )
+                .cast("bigint")
+                .alias("h_q"),
+                F.count(F.lit(1)).cast("bigint").alias("n_seeds_reached"),
+            )
         )
-    )
     return (
         cent.select(
             "node", (F.col("h_q") / 1000000000.0).alias("harmonic"),
@@ -2229,7 +2224,9 @@ def q_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dependency terms — bit-exactly (forced branch-equivalence
     # tested). The 5-join level pipeline below stays the else-branch
     # and the 100 TB path (its per-level scheduling floor made this
-    # the suite's second-slowest query, 8.5 s at sf0.1).
+    # the suite's second-slowest query, 8.5 s at sf0.1). Either branch
+    # ends with the per-node (node, bq, n_seed_contribs) sums; the
+    # top-20 below ranks them once.
     if probe.gate("betweenness", 0 < n_nodes <= _BC_NODE_GATE):
 
         def brandes(pdf):
@@ -2274,92 +2271,90 @@ def q_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                         bq[v] = bq.get(v, 0) + d
                         if d > 0:
                             contribs[v] = contribs.get(v, 0) + 1
-            top = sorted(
-                ((v, bq[v], contribs.get(v, 0)) for v in bq),
-                key=lambda r: (-r[1], r[0]),
-            )[:20]
             return pd.DataFrame(
-                [(v, b / 1e6, c) for v, b, c in top],
-                columns=["node", "betweenness", "n_seed_contribs"],
+                [(v, b, contribs.get(v, 0)) for v, b in bq.items()],
+                columns=["node", "bq", "n_seed_contribs"],
             )
 
-        return probe.single_task(
-            sym, brandes, "node bigint, betweenness double, n_seed_contribs bigint"
+        btw = probe.single_task(
+            sym, brandes, "node bigint, bq bigint, n_seed_contribs bigint"
+        )
+    else:
+        seeds = (
+            sym.select("u")
+            .distinct()
+            .filter(F.col("u") % _BC_SEED_MOD == 1)
+            .select(F.col("u").alias("s"))
+        )
+        l0 = seeds.select(
+            "s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sig")
         )
 
-    seeds = (
-        sym.select("u")
-        .distinct()
-        .filter(F.col("u") % _BC_SEED_MOD == 1)
-        .select(F.col("u").alias("s"))
-    )
-    l0 = seeds.select("s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sig"))
-
-    def expand(prev: DataFrame, *earlier: DataFrame) -> DataFrame:
-        e = sym.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
-        cand = (
-            prev.join(e, e["eu"] == prev["v"])
-            .select("s", F.col("ev").alias("nv"), "sig")
-            .groupBy("s", F.col("nv").alias("v"))
-            .agg(F.sum("sig").cast("long").alias("sig"))
-        )
-        for e in earlier:
-            cand = cand.join(e.select("s", "v"), ["s", "v"], "left_anti")
-        return cand
-
-    l1 = tracked_persist(expand(l0, l0))
-    l2 = tracked_persist(expand(l1, l0, l1))
-    l3 = tracked_persist(
-        expand(l2, l0, l1, l2).select(
-            "s",
-            "v",
-            F.when(F.col("sig") <= _BC_SIG_CAP, F.col("sig"))
-            .otherwise(
-                F.raise_error(
-                    F.lit("betweenness: sigma exceeds Q cap")
-                ).cast("long")
+        def expand(prev: DataFrame, *earlier: DataFrame) -> DataFrame:
+            e = sym.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
+            cand = (
+                prev.join(e, e["eu"] == prev["v"])
+                .select("s", F.col("ev").alias("nv"), "sig")
+                .groupBy("s", F.col("nv").alias("v"))
+                .agg(F.sum("sig").cast("long").alias("sig"))
             )
-            .alias("sig"),
-        )
-    )
+            for e in earlier:
+                cand = cand.join(e.select("s", "v"), ["s", "v"], "left_anti")
+            return cand
 
-    def backward(level: DataFrame, nxt: DataFrame) -> DataFrame:
-        """delta for `level` given the next level's (s, v, sig, dq)."""
-        e = sym.select(F.col("u").alias("ev"), F.col("v").alias("ew"))
-        nx = nxt.select(
-            "s",
-            F.col("v").alias("ew"),
-            F.col("sig").alias("nsig"),
-            F.col("dq").alias("ndq"),
-        )
-        j = (
-            level.join(e, level["v"] == e["ev"], "left")
-            .join(nx, ["s", "ew"], "left")
-            .withColumn(
-                "term",
-                F.expr(f"sig * ({_BC_Q} + ndq) DIV nsig"),
+        l1 = tracked_persist(expand(l0, l0))
+        l2 = tracked_persist(expand(l1, l0, l1))
+        l3 = tracked_persist(
+            expand(l2, l0, l1, l2).select(
+                "s",
+                "v",
+                F.when(F.col("sig") <= _BC_SIG_CAP, F.col("sig"))
+                .otherwise(
+                    F.raise_error(
+                        F.lit("betweenness: sigma exceeds Q cap")
+                    ).cast("long")
+                )
+                .alias("sig"),
             )
         )
-        return j.groupBy("s", "v").agg(
-            F.coalesce(F.sum("term"), F.lit(0)).cast("long").alias("dq"),
-            F.first("sig").alias("sig"),
-        )
 
-    d2 = tracked_persist(
-        backward(l2, l3.withColumn("dq", F.lit(0).cast("long")))
-    )
-    d1 = backward(l1, d2)
-    btw = (
-        d1.select("s", "v", "dq")
-        .unionAll(d2.select("s", "v", "dq"))
-        .groupBy(F.col("v").alias("node"))
-        .agg(
-            F.sum("dq").cast("bigint").alias("bq"),
-            F.count(F.when(F.col("dq") > 0, 1)).cast("bigint").alias(
-                "n_seed_contribs"
-            ),
+        def backward(level: DataFrame, nxt: DataFrame) -> DataFrame:
+            """delta for `level` given the next level's (s, v, sig, dq)."""
+            e = sym.select(F.col("u").alias("ev"), F.col("v").alias("ew"))
+            nx = nxt.select(
+                "s",
+                F.col("v").alias("ew"),
+                F.col("sig").alias("nsig"),
+                F.col("dq").alias("ndq"),
+            )
+            j = (
+                level.join(e, level["v"] == e["ev"], "left")
+                .join(nx, ["s", "ew"], "left")
+                .withColumn(
+                    "term",
+                    F.expr(f"sig * ({_BC_Q} + ndq) DIV nsig"),
+                )
+            )
+            return j.groupBy("s", "v").agg(
+                F.coalesce(F.sum("term"), F.lit(0)).cast("long").alias("dq"),
+                F.first("sig").alias("sig"),
+            )
+
+        d2 = tracked_persist(
+            backward(l2, l3.withColumn("dq", F.lit(0).cast("long")))
         )
-    )
+        d1 = backward(l1, d2)
+        btw = (
+            d1.select("s", "v", "dq")
+            .unionAll(d2.select("s", "v", "dq"))
+            .groupBy(F.col("v").alias("node"))
+            .agg(
+                F.sum("dq").cast("bigint").alias("bq"),
+                F.count(F.when(F.col("dq") > 0, 1)).cast("bigint").alias(
+                    "n_seed_contribs"
+                ),
+            )
+        )
     return (
         btw.orderBy(F.col("bq").desc(), "node")
         .limit(20)
@@ -2484,6 +2479,9 @@ _KZ_CAP = 1_000_000_000_000  # loud guard: path counts must fit 8^3 scaling
 # single-task kernel holds O(weighted pair rows) int64 arrays (the
 # backbone it derives from them is strictly smaller), so the canonical
 # pair count must be bounded before routing to it (~25 MB at the gate).
+# It also bounds the kernel's int64 sums: the backbone has at most
+# 2 * _KZ_GATE directed edges, each adding a capped p2 <= _KZ_CAP, so
+# p3 <= 2 * _KZ_GATE * _KZ_CAP = 2e18 < 2^63.
 _KZ_GATE = 1_000_000
 
 
@@ -2548,9 +2546,9 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §4.2, the Brandes/LOF house pattern): p1/p2/p3 are
     # three sparse matvecs over the degree-bounded backbone — under
     # the pair gate they run as np.bincount/np.add.at in ONE bounded
-    # task (same integer path counts, same cap raise, same
-    # (kq desc, node) top-20 via lexsort) instead of two persisted
-    # join+agg rounds plus a three-way join; the kernel also absorbs
+    # task (same integer path counts, same cap raise; the kq score and
+    # top-20 below run once in Spark for both branches) instead of two
+    # persisted join+agg rounds plus a three-way join; the kernel also absorbs
     # backbone construction (per-node top-_BB_DEG lexsort rank +
     # canonical dedup + undirect), so the window shuffle, the sym
     # persist and its count job disappear with it. The scheduled
@@ -2602,71 +2600,55 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise ValueError("katz: path count exceeds cap")
             p3 = np.zeros(n, dtype=np.int64)
             np.add.at(p3, vi, p2[ui])
-            kq = mul_i64(p1, 64) + mul_i64(p2, 8) + p3
-            top = np.lexsort((nodes, -kq))[:20]
             return pd.DataFrame(
-                {
-                    "node": nodes[top],
-                    "katz": kq[top] / 512.0,
-                    "paths_1": p1[top],
-                    "paths_2": p2[top],
-                    "paths_3": p3[top],
-                }
+                {"node": nodes, "paths_1": p1, "paths_2": p2, "paths_3": p3}
             )
 
-        return probe.single_task(
+        k = probe.single_task(
             pairs,
             katz_kernel,
-            "node bigint, katz double, paths_1 bigint, "
-            "paths_2 bigint, paths_3 bigint",
+            "node bigint, paths_1 bigint, paths_2 bigint, paths_3 bigint",
         )
-    edges0 = _backbone_edges(pairs)
-    sym = tracked_persist(_undirect(edges0))
-    p1 = sym.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("p"))
-    p1 = tracked_persist(p1)
-    e = sym.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
-    p2 = (
-        e.join(p1.select(F.col("v").alias("eu"), "p"), "eu")
-        .groupBy(F.col("ev").alias("v"))
-        .agg(F.sum("p").cast("bigint").alias("p"))
-    )
-    p2 = tracked_persist(p2)
-    guarded = F.when(F.col("p") <= _KZ_CAP, F.col("p")).otherwise(
-        F.raise_error(F.lit("katz: path count exceeds cap")).cast("long")
-    )
-    p3 = (
-        e.join(p2.select(F.col("v").alias("eu"), guarded.alias("p")), "eu")
-        .groupBy(F.col("ev").alias("v"))
-        .agg(F.sum("p").cast("bigint").alias("p"))
-    )
-    k = (
-        p1.select("v", F.col("p").alias("paths_1"))
-        .join(p2.select("v", F.col("p").alias("paths_2")), "v", "left")
-        .join(p3.select("v", F.col("p").alias("paths_3")), "v", "left")
-        .select(
-            F.col("v").alias("node"),
-            "paths_1",
-            F.coalesce(F.col("paths_2"), F.lit(0)).alias("paths_2"),
-            F.coalesce(F.col("paths_3"), F.lit(0)).alias("paths_3"),
+    else:
+        edges0 = _backbone_edges(pairs)
+        sym = tracked_persist(_undirect(edges0))
+        p1 = sym.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("p"))
+        p1 = tracked_persist(p1)
+        e = sym.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
+        p2 = (
+            e.join(p1.select(F.col("v").alias("eu"), "p"), "eu")
+            .groupBy(F.col("ev").alias("v"))
+            .agg(F.sum("p").cast("bigint").alias("p"))
         )
-        .select(
-            "node",
-            "paths_1",
-            "paths_2",
-            "paths_3",
-            (
-                F.lit(64) * F.col("paths_1")
-                + F.lit(8) * F.col("paths_2")
-                + F.col("paths_3")
-            ).alias("kq"),
+        p2 = tracked_persist(p2)
+        guarded = F.when(F.col("p") <= _KZ_CAP, F.col("p")).otherwise(
+            F.raise_error(F.lit("katz: path count exceeds cap")).cast("long")
         )
-    )
+        p3 = (
+            e.join(p2.select(F.col("v").alias("eu"), guarded.alias("p")), "eu")
+            .groupBy(F.col("ev").alias("v"))
+            .agg(F.sum("p").cast("bigint").alias("p"))
+        )
+        k = (
+            p1.select("v", F.col("p").alias("paths_1"))
+            .join(p2.select("v", F.col("p").alias("paths_2")), "v", "left")
+            .join(p3.select("v", F.col("p").alias("paths_3")), "v", "left")
+            .select(
+                F.col("v").alias("node"),
+                "paths_1",
+                F.coalesce(F.col("paths_2"), F.lit(0)).alias("paths_2"),
+                F.coalesce(F.col("paths_3"), F.lit(0)).alias("paths_3"),
+            )
+        )
+    # Spark's ANSI arithmetic raises on int64 overflow in kq, as
+    # DuckDB's BIGINT does in the oracle.
+    kq = F.lit(64) * F.col("paths_1") + F.lit(8) * F.col("paths_2") + F.col("paths_3")
     return (
-        k.orderBy(F.col("kq").desc(), "node")
+        k.orderBy(kq.desc(), "node")
         .limit(20)
         .select(
             F.col("node").cast("bigint").alias("node"),
-            (F.col("kq") / F.lit(512.0)).alias("katz"),
+            (kq / F.lit(512.0)).alias("katz"),
             F.col("paths_1").cast("bigint").alias("paths_1"),
             F.col("paths_2").cast("bigint").alias("paths_2"),
             F.col("paths_3").cast("bigint").alias("paths_3"),

@@ -2489,6 +2489,16 @@ def q_pass_at_k_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("k")
 
 
+def _q_mean(col: str):
+    """Mean of a 1e-6-quantized BIGINT column, rounded to the unit and
+    scaled back: the exact per-group mean both engines reproduce."""
+    return (
+        F.floor(F.sum(col).cast("double") / F.count(F.lit(1)) + F.lit(0.5))
+        .cast("bigint")
+        / 1e6
+    )
+
+
 # --------------------------------------------------------------------------
 # E320: self-BLEU-2 + distinct-2 — generation/corpus diversity audit
 # --------------------------------------------------------------------------
@@ -2723,21 +2733,14 @@ def q_self_bleu_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("g").alias("dg"), F.sum("cnt").alias("tg"))
     )
 
-    def q_mean(col: str):
-        return (
-            F.floor(F.sum(col).cast("double") / F.count(F.lit(1)) + F.lit(0.5))
-            .cast("bigint")
-            / 1e6
-        )
-
     return (
         scored.join(div2, "lang")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_cands"),
-            q_mean("bleu_q").alias("avg_self_bleu2"),
-            q_mean("p1_q").alias("avg_p1"),
-            q_mean("p2_q").alias("avg_p2"),
+            _q_mean("bleu_q").alias("avg_self_bleu2"),
+            _q_mean("p1_q").alias("avg_p1"),
+            _q_mean("p2_q").alias("avg_p2"),
             (
                 F.floor(
                     F.max("dg").cast("double") / F.max("tg") * 1000000
@@ -2929,20 +2932,13 @@ def q_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def q_mean(col: str):
-        return (
-            F.floor(F.sum(col).cast("double") / F.count(F.lit(1)) + F.lit(0.5))
-            .cast("bigint")
-            / 1e6
-        )
-
     return (
         scored.groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            q_mean("p_q").alias("avg_rouge_p"),
-            q_mean("r_q").alias("avg_rouge_r"),
-            q_mean("f_q").alias("avg_rouge_f1"),
+            _q_mean("p_q").alias("avg_rouge_p"),
+            _q_mean("r_q").alias("avg_rouge_r"),
+            _q_mean("f_q").alias("avg_rouge_f1"),
         )
         .orderBy("lang")
     )

@@ -620,8 +620,10 @@ def test_count_gated_branches_agree(spark, monkeypatch):
     _load_all()
     cases = [
         ("q_greedy_segmentation", llm_text, "_GLM_GATE", "greedy_segmentation"),
+        # surviving edges from either branch; one Spark degree count
         ("q_kcore_suppliers", advanced_models, "_KCORE_GATE", "kcore"),
         ("q_ktruss_parts", joins_sets, "_KT_GATE", "ktruss"),
+        # per-node (h_q, seeds reached) from either branch; one top-20
         ("q_harmonic_centrality", joins_sets, "_HC_GATE", "harmonic"),
         # node-count gate: a sparse many-node graph must route to the
         # join branch even when the EDGE count is under _HC_GATE —
@@ -640,6 +642,7 @@ def test_count_gated_branches_agree(spark, monkeypatch):
         # r10: numpy doubling replay vs the rerooted self-join loop
         ("q_functional_graph_rho", joins_sets, "_FG_GATE", "functional_rho"),
         # r10: single-task Brandes replay vs the 5-join level pipeline
+        # (integer bq sums; the top-20 runs in Spark after either branch)
         ("q_betweenness_centrality", joins_sets, "_BC_NODE_GATE", "betweenness"),
         # r11: single-task per-series LOF kernel vs the pair-join +
         # window + keyed-joins pipeline (integer-exact lof_q; the
@@ -654,14 +657,17 @@ def test_count_gated_branches_agree(spark, monkeypatch):
         ("q_ransac_price_line", robust_models, "_RS_KERNEL_PTS", "ransac"),
         # r12: single-task bincount/add.at bounded-hop path counts vs
         # the two persisted join+agg rounds + three-way join (integer
-        # path counts; katz double is one exact /512 in both branches)
+        # path counts; the kq score and top-20 run in Spark after
+        # either branch)
         ("q_katz_centrality", joins_sets, "_KZ_GATE", "katz"),
         # r12: single-task minimum.at relaxation vs the self-loop join
-        # loop (integer distances, same min-node source and fixpoint)
+        # loop (integer distances, same min-node source and fixpoint;
+        # the top-20 runs in Spark after either branch)
         ("q_bellman_ford_nearest", joins_sets, "_BF_GATE", "bellman_ford"),
-        # r12: single-task lexsort/run-length synchronous LPA vs the
-        # per-round join + groupBy + row_number pipeline (integer
-        # labels, same (count desc, label asc) argmax)
+        # r12: single-task run-length synchronous LPA vs the per-round
+        # join + groupBy + row_number pipeline (integer labels, same
+        # (count desc, label asc) argmax; the community count and
+        # top-20 run in Spark after either branch)
         ("q_lpa_communities", joins_sets, "_LPA_GATE", "lpa"),
         # r12: single-task 21-slope exact-median sweep vs the
         # crossJoin fan + window + join-back (integer medians/losses;

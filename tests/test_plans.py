@@ -62,7 +62,8 @@ PYTHON_SURFACE = {
     "q_ipf_raking_weights",  # E234 scaling rounds on the lang x
     # source contingency table in one bounded task
     "q_kcore_suppliers",  # E221 6 peel rounds on the O(nodes)
-    # sparsified edge list in one bounded task (count-gated)
+    # sparsified edge list in one bounded task (count-gated); the
+    # degree count runs in Spark on either branch's surviving edges
     "q_clamped_running_balance",  # E310 X2 per-user saturating-ledger
     # recursion (two-sided clamp has no window closed form)
     "q_polymorphic_udtf",  # E313 analyze()-time dynamic-schema UDTF
@@ -103,12 +104,18 @@ PYTHON_SURFACE = {
     # + lrd/lof integer algebra in one bounded task (r11); the
     # pair-join + window + three keyed joins stay the else-branch
     "q_bellman_ford_nearest",  # E301 edge-gated single-task minimum.at
-    # relaxation (r12); the self-loop join loop is the else-branch
-    "q_lpa_communities",  # E299 edge-gated single-task lexsort LPA
-    # rounds (r12); the join + argmax-window loop is the else-branch
+    # relaxation (r12) returning reached distances; the self-loop join
+    # loop is the else-branch
+    "q_lpa_communities",  # E299 edge-gated single-task LPA rounds
+    # (r12) returning node labels; the join + argmax-window loop is the
+    # else-branch
+    "q_harmonic_centrality",  # E316 edge/node/seed-gated single-task
+    # multi-source BFS; the join-frontier loop is the else-branch. Its
+    # kernel shows in the plan since the eager checkpoint on its output
+    # was dropped (the top-20 now runs in the kernel's task)
     "q_katz_centrality",  # E354 edge-gated single-task bincount/add.at
     # path counts over the backbone (r12); the join+agg rounds are the
-    # else-branch
+    # else-branch; the kq score runs in Spark on either
     "q_personalized_pagerank",  # E290 graphs.pagerank_exact with a
     # seed set: edge-gated single-task integer replay; the full-outer
     # frontier loop is the else-branch
@@ -447,3 +454,39 @@ def test_no_oversized_global_limit_in_plans(spark, plans):
         if big:
             offenders[name] = big
     assert not offenders, offenders
+
+
+def test_count_gated_tails_add_no_shuffle(spark, plans):
+    """A count-gated kernel returns the table its distributed loop ends
+    with, and the query's one Spark tail (top-k, community count, degree
+    count) ranks it. probe.single_task's output is one partition, so
+    that tail must run in the kernel's own task: no Exchange may sit
+    between the MapInPandas node and the root of the plan."""
+    import re
+
+    def indent(line: str) -> int:
+        return re.search(r"[A-Za-z*(]", line).start()
+
+    for name in [
+        "q_lpa_communities",
+        "q_bellman_ford_nearest",
+        "q_harmonic_centrality",
+        "q_betweenness_centrality",
+        "q_katz_centrality",
+        "q_kcore_suppliers",
+    ]:
+        lines = [ln for ln in plans[name].splitlines() if ln.strip()]
+        at = next(
+            (i for i, ln in enumerate(lines) if "MapInPandas" in ln), None
+        )
+        assert at is not None, (name, plans[name])
+        depth = indent(lines[at])
+        ancestors = []
+        for ln in reversed(lines[:at]):
+            if ln.startswith("=="):
+                break
+            if indent(ln) < depth:
+                ancestors.append(ln.strip())
+                depth = indent(ln)
+        assert ancestors, (name, plans[name])
+        assert not any("Exchange" in a for a in ancestors), (name, ancestors)

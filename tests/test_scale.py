@@ -286,23 +286,24 @@ def test_bpe_pair_counts_scale_linearly_with_duplication(spark):
     assert [(r, l, rr, pc * 3) for r, l, rr, pc in base] == got
 
 
-def test_ensure_shuffle_parallelism_gates(spark):
+def test_ensure_shuffle_parallelism_gates(spark, monkeypatch):
     """The workload-partition floor (r9, VERDICT r8 task #2) applies
     exactly when (a) the pair workload exceeds the default-parallelism
     budget, (b) there are at least as many keys as target partitions
     (hash partitioning cannot use more), and (c) no single key exceeds
     a task budget (a pinned partitioning cannot split a key and blocks
     AQE's skew split). Values are never changed, only partitioning."""
+    from fts_analysis_datalake_spark import catalog
     from fts_analysis_datalake_spark.catalog import ensure_shuffle_parallelism
 
     df = spark.range(1000).select(
         (F.col("id") % 100).alias("k"), F.col("id").alias("v")
     )
     dp = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(catalog, "_ROWS_PER_TASK", 1_000)
 
     floored = ensure_shuffle_parallelism(
-        df, 10_000_000, ["k"], n_keys=100_000, max_key_workload=10,
-        rows_per_task=1_000
+        df, 10_000_000, ["k"], n_keys=100_000, max_key_workload=10
     )
     assert floored is not df
     assert floored.rdd.getNumPartitions() == min(10_000, 32_768)
@@ -310,21 +311,21 @@ def test_ensure_shuffle_parallelism_gates(spark):
     # key-cardinality gate: fewer keys than target -> unchanged
     assert (
         ensure_shuffle_parallelism(
-            df, 10_000_000, ["k"], n_keys=50, max_key_workload=10,
-            rows_per_task=1_000
+            df, 10_000_000, ["k"], n_keys=50, max_key_workload=10
         )
         is df
     )
     # skew gate: one key over the task budget -> unchanged
     assert (
         ensure_shuffle_parallelism(
-            df, 10_000_000, ["k"], n_keys=100_000,
-            max_key_workload=2_000, rows_per_task=1_000
+            df, 10_000_000, ["k"], n_keys=100_000, max_key_workload=2_000
         )
         is df
     )
     # small workload -> floor to default parallelism (still a valid
     # co-partitioning for the join; values identical)
-    small = ensure_shuffle_parallelism(df, 1, ["k"], n_keys=100_000)
+    small = ensure_shuffle_parallelism(
+        df, 1, ["k"], n_keys=100_000, max_key_workload=1
+    )
     assert small.rdd.getNumPartitions() == dp
     assert sorted(r.v for r in small.collect()) == list(range(1000))
